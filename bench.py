@@ -1,15 +1,16 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: contract queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "throughput": {...}}
 
-Each query is forced end-to-end with a noop-format write (full
-physical execution, no driver collect bottleneck); aggregate-shaped
-results use count(). Run `python bench.py --scaling` for the N vs 4N
-(local[8] vs local[32]) scaling-efficiency evidence (separate
-processes, one JSON line each).
+`--tier core` (the default) times CORE_TIER; `--tier full` times every
+query of contract.build_queries(). Each query is forced end-to-end
+with a noop-format write (full physical execution, no driver collect
+bottleneck). Run `python bench.py --scaling` for the N vs 4N
+(local[nproc/4] vs local[nproc]) scaling-efficiency evidence
+(separate spark-submit processes, one JSON line).
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ import os
 import subprocess
 import sys
 import time
+
+from logging_spark.session import default_parallelism
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -36,195 +39,12 @@ def _persist(tag: str, obj: dict) -> None:
         with open(os.path.join(here, name), "w") as f:
             json.dump(obj, f, indent=1)
 
-HEADLINE = [
-    "pipe_e2e",
-    "pipe_route_fanout",
-    "pipe_dedup_w1",
-    "pipe_parse_grok",
-    "pipe_sessionize",
-    "tpch_q1_pricing",
-    "tpch_q3_top_revenue",
-    "window_top3_orders",
-    "text_quality",
-    "dedup_exact",
-    "dedup_minhash_lsh_fast",
-    "sim_topk_cosine",
-    "sim_ivf_topk",
-    "text_chunks",
-    "pipe_tumbling_window",
-    # round-2 operator families — visible round-over-round so perf
-    # regressions in cleaning/clustering/sampling/sharded-ANN show up
-    "docs_clean_e2e",
-    "docs_clean_e2e_fast",
-    "dedup_cluster",
-    "sample_global_shuffle",
-    "sim_topk_sharded",
-    # round-3 additions
-    "text_repetition",
-    "sample_importance",
-    "text_tfidf_topk",
-    "events_asof_last_error",
-    "events_incident_rollup",
-    "events_cohort_retention",
-    "text_heavy_tokens",
-    # round-3 late additions: passage dedup (explode+agg+rebuild),
-    # distributed prefix sum, hopping-window expand, OR-of-ANDs join
-    "docs_passage_dedup",
-    "docs_token_budget",
-    "events_sliding_window",
-    "tpch_q19_or_predicates",
-    # round-3 final additions: multi-exists fact self-join, audit
-    # fingerprint (xor agg), CDC diff, SCD2 double-window
-    "tpch_q21_lone_fault_supplier",
-    "audit_fingerprint",
-    "events_snapshot_diff",
-    "events_scd2",
-    # fifth-session families: template mining, session-analytics
-    # chain, hard negatives, int8 quantization audit
-    "pipe_log_templates",
-    "events_session_analytics_e2e",
-    "sim_hard_negatives",
-    "sim_quantize_int8",
-    # fifth-session closers: Arrow state-machine sessionization, HOF
-    # folds, LPA communities, Heaps-law vocab growth
-    "pipe_sessionize_capped",
-    "events_cusum_hourly",
-    "docs_lpa_communities",
-    "docs_vocab_growth",
-    # association/dedup/set-op closers
-    "events_cooccurrence",
-    "dedup_containment",
-    "events_rolling_wau",
-    # round-4 additions: windowed-argmin TPC-H Q2, prefix-filtered
-    # threshold join (shares the memoized shingle build with
-    # containment), token-pair lift, percentile-edge equi-depth
-    # histogram, consecutive same-speaker merge
-    "tpch_q2_min_cost_supplier",
-    "dedup_jaccard_threshold",
-    "docs_token_lift",
-    "events_equidepth_histogram",
-    "pipe_merge_consecutive",
-    # round-4 second-session additions: multiline record assembly
-    # (per-file window + ordered re-join), BPE pair scan, integer
-    # surprisal (two-shuffle vocab join), hot/cold skew-split join,
-    # two-hop link prediction, sketch-vs-exact MinHash audit
-    "pipe_multiline",
-    "text_bpe_pairs",
-    "text_surprisal",
-    "events_skew_join",
-    "docs_link_prediction",
-    "dedup_minhash_audit",
-    # round-4 third-session additions: BM25 retrieval (query-term
-    # semi-join), 2-round integer Lloyd k-means (long-form joins),
-    # count-min build+probe, URL filtering, template-prefix dedup,
-    # per-source datacard
-    "text_bm25_topk",
-    "sim_kmeans",
-    "agg_countmin_audit",
-    "text_url_domains",
-    "pipe_prefix_dedup",
-    "docs_datacard",
-    "docs_export_e2e",
-    "text_phonetic_blocking",
-    "docs_rrf",
-    "docs_bfs_layers",
-    # round-4 fourth-session additions: KMV sketch build+audit and
-    # theta intersection, blocked ER scoring (1M pairs at sf0.1),
-    # SemDeDup cells+prune, PII regex chain, bigram LM-band scoring,
-    # positional phrase search, lagged autocorrelation moments
-    "agg_kmv_audit",
-    "agg_kmv_intersection",
-    "dim_entity_matches",
-    "sim_semdedup",
-    "text_pii_redact",
-    "text_bigram_surprisal",
-    "text_phrase_search",
-    "events_autocorr",
-    # round-4 fifth-session additions: cogroup LCS drift (the repo's
-    # one cogroup Arrow path), Holt HOF fold, integer Cohen's kappa,
-    # leave-one-source-out ablation, corpus keyness top-k
-    "events_user_drift",
-    "events_holt_trend",
-    "dq_label_kappa",
-    "docs_source_ablation",
-    "text_keyness",
-    # fifth-session closers: OLS slope, Wilson keep-rank, hashed
-    # linear scorer, l-diversity, mergeable quantile sketch, VARIANT
-    # props path
-    "events_trend_slope",
-    "dq_wilson_keep",
-    "text_model_score",
-    "dq_l_diversity",
-    "agg_quantile_sketch",
-    "events_props_variant",
-    # sixth-session model-eval family: exact AUC, calibration bins,
-    # snapshot drift index
-    "dq_score_auc",
-    "dq_calibration",
-    "events_drift_index",
-    "text_pair_overlap",
-    "events_forecast_backtest",
-    "dq_fleiss_kappa",
-    "text_compression_census",
-    "dq_benford",
-    "events_attribution_windowed",
-    "sim_source_affinity",
-    "events_behavior_diversity",
-    "events_rate_limit",
-    "docs_gini",
-    "docs_length_emd",
-    "events_slo_burn",
-    "events_cohort_ltv",
-    "events_burstiness",
-    "docs_filter_cascade",
-    "events_rfm_segments",
-    "text_lang_confusion",
-    "dq_threshold_coverage",
-    "sample_temperature_mix",
-    # seventh-session inference/planning/mining families: Poisson
-    # bootstrap (map-side B-fold explode), KM product fold,
-    # changepoint argmax, join-size prediction, skyline single-sort,
-    # subsequence support self-join
-    "events_bootstrap_ci",
-    "events_km_survival",
-    "events_changepoint",
-    "agg_join_cardinality",
-    "docs_pareto_front",
-    "events_subseq_patterns",
-    "events_ab_cuped",
-    "dq_isotonic",
-    "sample_neyman",
-    "text_vocab_coverage",
-    "sample_raking",
-    "docs_venn3",
-    "events_overdispersion",
-    "events_mannwhitney",
-    "events_logrank",
-    "events_theil_sen",
-    "events_crosscorr",
-    "events_churn_labels",
-    "events_bootstrap_ci_fast",
-    "events_anova_hour",
-    "dq_simpson",
-    "events_ks_test",
-    "events_chi2_daypart",
-    "events_covariate_balance",
-    "dq_pr_curve",
-    "events_unique_users_curve",
-    "events_ab_bootstrap_delta",
-    # round-5 additions: retrieval ranking metrics (baked-constant
-    # integer nDCG), Stupid-Backoff trigram LM band
-    "dq_retrieval_ndcg",
-    "dq_retrieval_mrr",
-    "text_backoff_lm",
-]
-
 # THE headline tier: flagship chains plus the historically expensive /
-# once-regressed set, one pass ~30 queries. The 135-query full list
-# above stays the secondary artifact ("full_*" keys); the core subtotal
-# is the per-round signal — a 135-query suite needs a ~100 s calm
-# window, which this VM rarely grants, and the round-over-round diff
-# drowned in ambient noise at that width.
+# once-regressed set, one pass ~30 queries. `--tier full` adds every
+# other contract query under "full_*" keys; the core subtotal is the
+# per-round signal — the full suite's round-over-round diff drowns in
+# ambient noise at that width. tests/test_contract_package.py keeps every
+# name here a contract query.
 CORE_TIER = [
     "pipe_e2e", "pipe_route_fanout", "pipe_parse_grok",
     "pipe_sessionize_capped", "pipe_multiline",
@@ -257,7 +77,7 @@ def _plan_exchanges(df) -> int:
         r"rangepartitioning|SinglePartition)", plan))
 
 
-def run_suite(cpus: int, repeats: int = 3, tier: str = "full") -> dict:
+def run_suite(cpus: int, repeats: int = 3, tier: str = "core") -> dict:
     from logging_spark.session import build_session
     from logging_spark import contract
 
@@ -279,7 +99,7 @@ def run_suite(cpus: int, repeats: int = 3, tier: str = "full") -> dict:
     # a noisy window from any single query. min is the headline
     # (closest to the machine's true capability); median is reported
     # alongside so regressions are distinguishable from noise.
-    suite = CORE_TIER if tier == "core" else HEADLINE
+    suite = CORE_TIER if tier == "core" else list(queries)
     samples: dict[str, list[float]] = {name: [] for name in suite}
     for _ in range(repeats):
         for name in suite:
@@ -305,7 +125,7 @@ def run_suite(cpus: int, repeats: int = 3, tier: str = "full") -> dict:
     import statistics
     best = {n: min(s) for n, s in samples.items()}
     med = {n: round(statistics.median(s), 3) for n, s in samples.items()}
-    core = [n for n in (CORE_TIER if tier != "core" else suite) if n in best]
+    core = [n for n in CORE_TIER if n in best]
     core_total = round(sum(best[n] for n in core), 3)
     out = {
         "metric": (f"core-tier suite wall time ({len(core)} queries, "
@@ -354,143 +174,74 @@ def run_suite(cpus: int, repeats: int = 3, tier: str = "full") -> dict:
     return out
 
 
+def _driver_mem() -> str:
+    """Driver heap for one spark-submit leg: a quarter of MemAvailable
+    (local mode runs every task in the driver JVM), 1-8 GiB."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemAvailable:"))
+    return f"{max(1024, min(8192, kb // 4096))}m"
+
+
+def _spark_submit(here: str, cpus: int, *job_args: str) -> dict:
+    """Run run_job.py under spark-submit with deployment settings only
+    (master, driver heap, py-files): every other conf is session.py's
+    own default, so the harness measures the program as shipped.
+    Returns the job's last stdout JSON line."""
+    p = subprocess.run([
+        "spark-submit", "--master", f"local[{cpus}]",
+        "--driver-memory", _driver_mem(),
+        "--py-files", os.path.join(here, "dist/logging_spark.zip"),
+        os.path.join(here, "run_job.py"), *job_args,
+    ], capture_output=True, text=True, check=True)
+    return json.loads(p.stdout.strip().splitlines()[-1])
+
+
 def _gen_input(here: str, n_conversations: int, turns_per_conv: int) -> str:
-    """Materialize the synthetic transcript + lookup tables to tmpfs
-    parquet ONCE per workload and return the directory.
+    """Materialize the synthetic transcript + lookup tables as parquet
+    ONCE per workload (under .bench/ in the checkout) and return the
+    directory.
 
     The north rule's job is batch-over-an-Iceberg-TABLE: a real run
     scans committed columnar files, it does not synthesize its input
     inline. Generating inside the timed window also measured the
     generator, whose per-row format_string/array allocations made the
-    first map stage GC-bound (219 task-GC-seconds at 16 threads vs 40
-    at 4 — profiled round 3) and polluted the scaling ratio with a
-    component a production job doesn't have. Both legs now scan the
-    SAME files; generation happens here, untimed."""
-    base = f"/dev/shm/bench_input_{n_conversations}x{turns_per_conv}"
-    if (os.path.exists(f"{base}/turns/_SUCCESS")
-            and os.path.exists(f"{base}/lookup/_SUCCESS")):
-        return base
-    subprocess.run([
-        "spark-submit", "--master", "local[32]", "--driver-memory", "16g",
-        "--conf", "spark.ui.enabled=false",
-        "--conf", "spark.local.dir=/dev/shm/spark-local",
-        "--conf", "spark.driver.extraJavaOptions=-XX:+UseParallelGC",
-        "--conf", "spark.sql.parquet.compression.codec=zstd",
-        "--py-files", os.path.join(here, "dist/logging_spark.zip"),
-        os.path.join(here, "run_job.py"), "--warehouse", "/dev/shm/unused",
-        "--gen-input", base,
-        "--n-conversations", str(n_conversations),
-        "--turns-per-conv", str(turns_per_conv),
-    ], check=True, capture_output=True)
+    first map stage GC-bound, and polluted the scaling ratio with a
+    component a production job doesn't have. Both legs scan the SAME
+    files; generation happens here, untimed."""
+    base = os.path.join(here, ".bench",
+                        f"input_{n_conversations}x{turns_per_conv}")
+    done = os.path.join(base, ".done")
+    if not os.path.exists(done):
+        _spark_submit(here, default_parallelism(),
+                      "--warehouse", os.path.join(here, ".bench", "unused"),
+                      "--gen-input", base,
+                      "--n-conversations", str(n_conversations),
+                      "--turns-per-conv", str(turns_per_conv))
+        open(done, "w").close()
     return base
 
 
-def _eventlog_confs(cpus: int, tag: str) -> list[str]:
-    base = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
-    if not base:
-        return []
-    d = f"{base}/{cpus}_{tag}"
-    os.makedirs(d, exist_ok=True)
-    return ["--conf", "spark.eventLog.enabled=true",
-            "--conf", f"spark.eventLog.dir={d}",
-            "--conf", "spark.eventLog.compress=false"]
-
-
-def _submit_once(here: str, cpus: int, n_conversations: int,
-                 turns_per_conv: int, tag: str,
-                 input_dir: str | None = None) -> dict:
+def _submit_once(here: str, cpus: int, tag: str, input_dir: str) -> dict:
     import shutil
-    # warehouse on tmpfs: the VM's single virtio disk is a sandbox
-    # artifact (a real cluster writes sinks to distributed storage that
-    # scales with executors); shuffle dirs are on tmpfs for the same
-    # reason. Sink size at this workload is ~200 MB — far under RAM.
-    wh = f"/dev/shm/wh_bench_{cpus}_{tag}"
+    wh = os.path.join(here, ".bench", f"wh_{cpus}_{tag}")
     shutil.rmtree(wh, ignore_errors=True)
-    cmd = [
-        "spark-submit", "--master", f"local[{cpus}]",
-        # spark-submit defaults to a 1g driver; in local mode the
-        # driver IS the executor, so size it like one. Held CONSTANT
-        # across legs: scaling it with cores (64g at 16 threads) was
-        # measured 6.6x SLOWER than 16g on this VM — filling a ~21 GB
-        # eden is all page-fault/TLB kernel time here (A/B/C factor
-        # sweep, round 2; same workload: 16g=55s, 64g=364s).
-        "--driver-memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        # 4x cores: wave quantization dominates at 2x (64 tasks on 32
-        # cores = 2 waves; a straggler idles 31 cores for its whole
-        # overhang). Finer tasks pack the tail — same rule as a real
-        # cluster's 2-4x total-cores guidance.
-        "--conf", f"spark.sql.shuffle.partitions={4 * cpus}",
-        "--conf", "spark.ui.enabled=false",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.adaptive.skewJoin.enabled=true",
-        # we size shuffle partitions to 4x cores explicitly; AQE's
-        # post-shuffle coalescing undoes that into ~1.2 waves (profiled:
-        # 64 -> 19 tasks on 16 cores, par 10.8/16, a 34s straggler as
-        # the whole tail). Skew-join splitting stays ON — only the
-        # coalescer is disabled.
-        "--conf", "spark.sql.adaptive.coalescePartitions.enabled=false",
-        "--conf", "spark.local.dir=/dev/shm/spark-local",
-        # JVM runtime config held IDENTICAL across legs (machine-sized
-        # GC/JIT/netty pools); only task parallelism varies. Pinning
-        # -XX:ActiveProcessorCount to the leg's core budget was tried
-        # and REJECTED: it slowed the 16-thread leg 40% (56s -> 78.5s,
-        # ParallelGC thread starvation in the write stage) and the
-        # 4-thread leg 24%, and worsened the measured ratio — the
-        # cluster harness keeps it because 4 cohabiting JVMs otherwise
-        # oversubscribe GC threads 4x, a different failure.
-        # -Xmn8g: ParallelGC's default young gen (heap/3 ~= 5.3g) made
-        # the hot stages pause-bound at 16 threads (profiled 72-107
-        # task-GC-seconds in the transform stage); a larger eden cuts
-        # collection frequency with the same small live set, and STW
-        # pauses cost the WIDE leg proportionally more (16 idle threads
-        # per pause vs 4). Held identical across legs like every other
-        # JVM flag.
-        "--conf", "spark.driver.extraJavaOptions=-XX:+UseParallelGC -Xmn8g",
-        "--conf", "spark.sql.parquet.compression.codec=zstd",
-        # dynamic-partition write path: without concurrent writers each
-        # write task SORTS its rows by partition key first (an
-        # UnsafeExternalSorter materialization that showed up as the
-        # write stage's allocation churn); <=2 (sink,bucket) cells land
-        # per task at 128 write partitions, so 8 writers never spill
-        # back to the sort path (profiled: write-stage CPU 102 -> 74
-        # core-s at 16 threads)
-        "--conf", "spark.sql.maxConcurrentOutputFileWriters=8",
-        # text-like columns are ~unique per row: parquet's dictionary
-        # build (a per-writer byte[] hash map) always fails to 1 MB and
-        # falls back, pure allocation overhead — zstd on plain pages
-        # compresses these fine. Keyed columns (conv_id, role, tool...)
-        # keep dictionaries.
-        "--conf", "spark.hadoop.parquet.enable.dictionary#text=false",
-        "--conf", "spark.hadoop.parquet.enable.dictionary#message=false",
-        "--conf", "spark.hadoop.parquet.enable.dictionary#attrs=false",
-        "--conf", "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version=2",
-        # stage-level evidence on demand: set SPARK_GRAFT_EVENTLOG_DIR
-        # to capture per-leg event logs for tools/stage_profile.py
-        # (per-stage core-seconds / GC / parallelism across legs)
-        *(_eventlog_confs(cpus, tag)),
-        "--py-files", os.path.join(here, "dist/logging_spark.zip"),
-        os.path.join(here, "run_job.py"),
-        "--warehouse", wh,
-        *(["--input-parquet", f"{input_dir}/turns",
-           "--lookup-parquet", f"{input_dir}/lookup"] if input_dir else []),
-        "--n-conversations", str(n_conversations),
-        "--turns-per-conv", str(turns_per_conv),
-        # workload held CONSTANT across parallelism levels: bucket and
-        # write-partition counts must not vary with cpus or the two
-        # legs run different jobs. 128 write partitions packs cleanly
-        # at both widths (16 waves at 8 cores, 4 at 32).
-        "--num-buckets", "32",
-        "--snapshot", f"bench-{cpus}-{tag}",
-        "--write-partitions", "128",
-    ]
-    p = subprocess.run(cmd, capture_output=True, text=True, check=True)
-    stats = json.loads(p.stdout.strip().splitlines()[-1])
+    # workload held CONSTANT across parallelism levels: the bucket
+    # count must not vary with cpus or the two legs run different jobs
+    stats = _spark_submit(
+        here, cpus, "--warehouse", wh,
+        "--input-parquet", f"{input_dir}/turns",
+        "--lookup-parquet", f"{input_dir}/lookup",
+        "--num-buckets", "32", "--snapshot", f"bench-{cpus}-{tag}")
     shutil.rmtree(wh, ignore_errors=True)
     return stats
 
 
-def run_scaling(n_conversations: int = 80000, turns_per_conv: int = 100,
-                repeats: int = 5, pair: tuple[int, int] = (8, 32)) -> dict:
+def run_scaling(pair: tuple[int, int], n_conversations: int = 80000,
+                turns_per_conv: int = 100, repeats: int = 5) -> dict:
     """North-rule scaling evidence: the SAME end-to-end job
     (parse→enrich→route→aggregate incl. partitioned sink writes) via
     spark-submit --py-files at N and 4N parallelism (local[N] vs
@@ -500,7 +251,7 @@ def run_scaling(n_conversations: int = 80000, turns_per_conv: int = 100,
     Iceberg table, it doesn't synthesize input inline).
     Efficiency = (tput_4N / tput_N) / 4.
 
-    Methodology against this VM's 2-3x ambient variance:
+    Methodology against the host's ambient variance:
     - legs are INTERLEAVED (N, 4N, N, 4N, ...) so a noisy window hits
       both legs, not one;
     - BOTH best-of-repeats and median-of-repeats efficiencies are
@@ -508,11 +259,10 @@ def run_scaling(n_conversations: int = 80000, turns_per_conv: int = 100,
       median shows the distribution didn't get cherry-picked;
     - a raw-CPU calibration (pure multiprocessing busy loop, N vs 4N
       processes, no Spark/IO) runs INSIDE the same measurement window,
-      before every repeat, because this VM cannot deliver 4x userspace
-      throughput at full width (hypervisor steal + oversubscription);
-      the per-window ceiling is what the Spark ratio must be read
-      against. pair=(4,16) keeps both legs under half the vCPUs, where
-      the hypervisor penalty is smallest."""
+      before every repeat, because a shared host cannot deliver 4x
+      userspace throughput at full width (hypervisor steal +
+      oversubscription); the per-window ceiling is what the Spark
+      ratio must be read against."""
     here = os.path.dirname(os.path.abspath(__file__))
     subprocess.run([sys.executable, os.path.join(here, "make_pyfiles.py")],
                    check=True, capture_output=True)
@@ -525,9 +275,7 @@ def run_scaling(n_conversations: int = 80000, turns_per_conv: int = 100,
     def _one_window(r: int) -> None:
         ceilings.append(_cpu_calibration(pair))
         for cpus in (lo, hi):
-            samples[cpus].append(_submit_once(
-                here, cpus, n_conversations, turns_per_conv, f"r{r}",
-                input_dir=input_dir))
+            samples[cpus].append(_submit_once(here, cpus, f"r{r}", input_dir))
 
     for r in range(repeats):
         _one_window(r)
@@ -603,190 +351,6 @@ def run_scaling(n_conversations: int = 80000, turns_per_conv: int = 100,
     }
 
 
-def _start_standalone(n_workers: int = 4, worker_cores: int = 8,
-                      worker_mem: str = "9g") -> list:
-    """Stand up a localhost standalone cluster: one master + n_workers
-    worker JVMs. Returns the Popen handles (master first) for teardown.
-
-    Why: local[N] vs local[4N] shares ONE heap/GC across both legs,
-    which is not how a cluster scales — N->4N executors brings 4x
-    heaps, 4x GC threads pools, 4x shuffle trees. Separate worker JVMs
-    on one box keep the memory-bandwidth/SMT reality of the VM while
-    removing the single-JVM artifacts, so the measured ratio is the
-    closest sandbox analog of "the same job on a 1-node vs 4-node
-    cluster"."""
-    import urllib.request
-    try:
-        with urllib.request.urlopen("http://127.0.0.1:8090/json/",
-                                    timeout=2) as r:
-            r.read()
-        raise RuntimeError("a standalone master is already serving on "
-                           ":8090 — kill stale deploy.master/deploy.worker "
-                           "processes before running --scaling-cluster")
-    except RuntimeError:
-        raise
-    except Exception:
-        pass  # nothing listening: good
-    env = dict(os.environ, SPARK_MASTER_HOST="127.0.0.1")
-    logs = "/dev/shm/sa-logs"
-    os.makedirs(logs, exist_ok=True)
-    procs = [subprocess.Popen(
-        ["spark-class", "org.apache.spark.deploy.master.Master",
-         "--host", "127.0.0.1", "--port", "7077", "--webui-port", "8090"],
-        stdout=open(f"{logs}/master.log", "w"), stderr=subprocess.STDOUT,
-        env=env)]
-    for i in range(n_workers):
-        procs.append(subprocess.Popen(
-            ["spark-class", "org.apache.spark.deploy.worker.Worker",
-             "spark://127.0.0.1:7077", "--host", "127.0.0.1",
-             "--cores", str(worker_cores), "--memory", worker_mem,
-             "--webui-port", str(8091 + i),
-             "--work-dir", f"/dev/shm/sa-work{i}"],
-            stdout=open(f"{logs}/worker{i}.log", "w"),
-            stderr=subprocess.STDOUT, env=env))
-    deadline = time.time() + 90
-    while time.time() < deadline:
-        try:
-            with urllib.request.urlopen(
-                    "http://127.0.0.1:8090/json/", timeout=5) as r:
-                st = json.loads(r.read())
-            if sum(1 for w in st.get("workers", [])
-                   if w.get("state") == "ALIVE") >= n_workers:
-                return procs
-        except Exception:
-            pass
-        time.sleep(2)
-    _stop_standalone(procs)
-    raise RuntimeError("standalone cluster failed to start (see "
-                       "/dev/shm/sa-logs)")
-
-
-def _stop_standalone(procs: list) -> None:
-    for p in reversed(procs):  # workers first, master last
-        p.terminate()
-    for p in procs:
-        try:
-            p.wait(timeout=15)
-        except Exception:
-            p.kill()
-
-
-def _submit_once_cluster(here: str, total_cores: int, n_conversations: int,
-                         turns_per_conv: int, tag: str,
-                         input_dir: str | None = None) -> dict:
-    """One e2e run against the standalone master with a core budget:
-    total_cores=8 -> 1 executor (one 'node'), 32 -> 4 executors."""
-    import shutil
-    wh = f"/dev/shm/wh_bench_c{total_cores}_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    cmd = [
-        "spark-submit", "--master", "spark://127.0.0.1:7077",
-        "--total-executor-cores", str(total_cores),
-        "--executor-cores", "8",
-        "--executor-memory", "8g",
-        "--driver-memory", "4g",
-        "--conf", f"spark.sql.shuffle.partitions={4 * total_cores}",
-        # explicit 4x-cores task sizing; AQE coalescing would repack it
-        # into ragged ~1.2-wave stages (see _submit_once)
-        "--conf", "spark.sql.adaptive.coalescePartitions.enabled=false",
-        # everything is one host: locality tiers are meaningless, and
-        # the default 3s wait stacks up across the pipeline's many
-        # small single-task jobs (coalesce(1) agg/checkpoint writes)
-        # when slots live on 4 executors instead of 1
-        "--conf", "spark.locality.wait=0",
-        "--conf", "spark.ui.enabled=false",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.adaptive.skewJoin.enabled=true",
-        "--conf", "spark.local.dir=/dev/shm/spark-local",
-        # each executor JVM must size its runtime (GC threads, JIT,
-        # netty pools) for ITS core share, not the whole box — on a
-        # real cluster the container does this; here 4 JVMs that each
-        # think they own 32 CPUs run ~4x oversubscribed GC threads and
-        # thrash (measured: 978s GC in one stage without this cap)
-        "--conf", ("spark.executor.extraJavaOptions=-XX:+UseParallelGC "
-                   "-XX:ActiveProcessorCount=8"),
-        "--conf", ("spark.driver.extraJavaOptions=-XX:+UseParallelGC "
-                   "-XX:ActiveProcessorCount=4"),
-        "--conf", "spark.sql.parquet.compression.codec=zstd",
-        # same write-path confs as _submit_once (sort-free dynamic
-        # partition writers; no dictionary build on ~unique text cols)
-        "--conf", "spark.sql.maxConcurrentOutputFileWriters=8",
-        "--conf", "spark.hadoop.parquet.enable.dictionary#text=false",
-        "--conf", "spark.hadoop.parquet.enable.dictionary#message=false",
-        "--conf", "spark.hadoop.parquet.enable.dictionary#attrs=false",
-        "--conf", "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version=2",
-        "--py-files", os.path.join(here, "dist/logging_spark.zip"),
-        os.path.join(here, "run_job.py"),
-        "--warehouse", wh,
-        *(["--input-parquet", f"{input_dir}/turns",
-           "--lookup-parquet", f"{input_dir}/lookup"] if input_dir else []),
-        "--n-conversations", str(n_conversations),
-        "--turns-per-conv", str(turns_per_conv),
-        "--num-buckets", "32",
-        "--snapshot", f"bench-c{total_cores}-{tag}",
-        "--write-partitions", "128",
-    ]
-    p = subprocess.run(cmd, capture_output=True, text=True, check=True)
-    stats = json.loads(p.stdout.strip().splitlines()[-1])
-    shutil.rmtree(wh, ignore_errors=True)
-    return stats
-
-
-def run_scaling_cluster(n_conversations: int = 160000,
-                        turns_per_conv: int = 100, repeats: int = 5,
-                        pair: tuple[int, int] = (8, 32)) -> dict:
-    """North-rule scaling evidence, cluster edition: the SAME job on a
-    localhost standalone cluster at 1 executor (N=8 cores) vs 4
-    executors (4N=32 cores). Executors are separate JVMs with their
-    own heaps — the 4N leg gets 4x memory and 4x GC capacity exactly
-    as a real 4-node cluster would. Interleaved legs + in-window CPU
-    calibration as in run_scaling."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    subprocess.run([sys.executable, os.path.join(here, "make_pyfiles.py")],
-                   check=True, capture_output=True)
-    lo, hi = pair
-    input_dir = _gen_input(here, n_conversations, turns_per_conv)
-    procs = _start_standalone(n_workers=max(hi // 8, 1))
-    samples: dict[int, list[dict]] = {lo: [], hi: []}
-    ceilings = []
-    try:
-        for r in range(repeats):
-            ceilings.append(_cpu_calibration(pair))
-            for cores in (lo, hi):
-                samples[cores].append(_submit_once_cluster(
-                    here, cores, n_conversations, turns_per_conv, f"r{r}",
-                    input_dir=input_dir))
-    finally:
-        _stop_standalone(procs)
-    import statistics
-    runs = {}
-    for cores, ss in samples.items():
-        best = min(ss, key=lambda s: s["seconds"])
-        med_tput = statistics.median(s["turns_per_sec"] for s in ss)
-        runs[cores] = {"seconds": best["seconds"],
-                       "all_seconds": [s["seconds"] for s in ss],
-                       "n_input_turns": best["n_input_turns"],
-                       "routed_rows": sum(v["n_rows"] for v in best["per_sink_counts"].values()),
-                       "turns_per_sec": best["turns_per_sec"],
-                       "turns_per_sec_median": round(med_tput, 1),
-                       "phase_seconds_best": best.get("phase_seconds", {})}
-    eff_best = (runs[hi]["turns_per_sec"] / runs[lo]["turns_per_sec"]) / 4.0
-    eff_med = (runs[hi]["turns_per_sec_median"]
-               / runs[lo]["turns_per_sec_median"]) / 4.0
-    return {
-        "metric": (f"scaling efficiency e2e pipeline {lo // 8}x8 -> "
-                   f"{hi // 8}x8 executor JVMs (N vs 4N nodes, "
-                   "standalone cluster)"),
-        "value": round(eff_best, 3), "unit": "ratio",
-        "value_median": round(eff_med, 3),
-        "runs": {f"cores{c}": runs[c] for c in (lo, hi)},
-        "hw_ceiling_per_window": ceilings,
-        "hw_ceiling_best": max(c["raw_cpu_efficiency"] for c in ceilings),
-        "workload": {"n_conversations": n_conversations,
-                     "turns_per_conv": turns_per_conv},
-    }
-
-
 def _burn(n: int) -> int:
     x = 0
     for i in range(n):
@@ -794,8 +358,8 @@ def _burn(n: int) -> int:
     return x
 
 
-def _cpu_calibration(pair: tuple[int, int] = (8, 32)) -> dict:
-    """Pure-userspace CPU scaling of this VM, N vs 4N processes: the
+def _cpu_calibration(pair: tuple[int, int]) -> dict:
+    """Pure-userspace CPU scaling of this host, N vs 4N processes: the
     upper bound any N->4N Spark measurement can reach in this window."""
     import multiprocessing as mp
 
@@ -813,30 +377,13 @@ def _cpu_calibration(pair: tuple[int, int] = (8, 32)) -> dict:
 
 
 def main() -> int:
-    if "--scaling-cluster" in sys.argv:
-        # --scaling-cluster [lo,hi] [n_conversations] [repeats]
-        i = sys.argv.index("--scaling-cluster")
-        rest = sys.argv[i + 1:]
-        pair = (8, 32)
-        kwargs = {}
-        if rest and "," in rest[0]:
-            lo, hi = rest[0].split(",")
-            pair = (int(lo), int(hi))
-            rest = rest[1:]
-        if rest:
-            kwargs["n_conversations"] = int(rest[0])
-        if len(rest) > 1:
-            kwargs["repeats"] = int(rest[1])
-        out = run_scaling_cluster(pair=pair, **kwargs)
-        _persist(f"scaling_cluster_{pair[0]}_{pair[1]}", out)
-        print(json.dumps(out))
-        return 0
     if "--scaling" in sys.argv:
         # --scaling [lo,hi] [n_conversations] [repeats]
-        # e.g. `--scaling 4,16 160000 3`
+        # e.g. `--scaling 1,4 20000 3`
         i = sys.argv.index("--scaling")
         rest = sys.argv[i + 1:]
-        pair = (8, 32)
+        n = default_parallelism()
+        pair = (max(n // 4, 1), n)
         kwargs = {}
         if rest and "," in rest[0]:
             lo, hi = rest[0].split(",")
@@ -846,17 +393,16 @@ def main() -> int:
             kwargs["n_conversations"] = int(rest[0])
         if len(rest) > 1:
             kwargs["repeats"] = int(rest[1])
-        out = run_scaling(pair=pair, **kwargs)
+        out = run_scaling(pair, **kwargs)
         _persist(f"scaling_{pair[0]}_{pair[1]}", out)
         print(json.dumps(out))
         return 0
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    tier = "full"
+    tier = "core"
     if "--tier" in sys.argv:
         tier = sys.argv[sys.argv.index("--tier") + 1]
         assert tier in ("core", "full"), tier
-    out = run_suite(cpus, repeats=repeats, tier=tier)
+    out = run_suite(default_parallelism(), repeats=repeats, tier=tier)
     _persist("headline" if tier != "core" else "headline_core", out)
     print(json.dumps(out))
     return 0

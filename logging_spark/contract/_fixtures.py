@@ -1,7 +1,6 @@
 """Shared fixtures for the contract package: session/table helpers,
 memoized frames, CTE strings and cross-family oracle helpers.
-Auto-split from the original single-module contract by
-tools/split_contract.py.
+Split mechanically from the original single-module contract.
 """
 
 

@@ -72,7 +72,8 @@ def _rotation_offset() -> int:
             return 0
     try:
         from pathlib import Path
-        for root in (Path(__file__).resolve().parent.parent, Path.cwd()):
+        # parents[2] is the repo root (logging_spark/contract/_window.py)
+        for root in (Path(__file__).resolve().parents[2], Path.cwd()):
             hits = list(root.glob("CORRECTNESS_r*.json"))
             if hits:
                 return len(hits)

@@ -1,4 +1,4 @@
-"""dedup family: contract queries (+ oracles) — auto-split from the original contract module by tools/split_contract.py; statement order preserved."""
+"""dedup family: contract queries (+ oracles) — split mechanically from the original single contract module; statement order preserved."""
 
 from __future__ import annotations
 

@@ -1,4 +1,4 @@
-"""events family: contract queries — auto-split by tools/split_contract.py; statement order preserved."""
+"""events family: contract queries — split mechanically from the original single contract module; statement order preserved."""
 
 from __future__ import annotations
 

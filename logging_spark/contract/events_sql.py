@@ -1,4 +1,4 @@
-"""events family: DuckDB oracle SQL (part 1) — auto-split by tools/split_contract.py."""
+"""events family: DuckDB oracle SQL (part 1) — split mechanically from the original single contract module."""
 
 from __future__ import annotations
 

@@ -342,11 +342,17 @@ def diameter_2sweep(pairs: DataFrame, src: str = "doc_a",
 
     Two bounded 1-row collects pick the sweep endpoints (same class
     as the cluster tier probe / BPE argmax); each sweep is
-    bfs_layers' checkpoint-pinned frontier expansion.
+    bfs_layers' checkpoint-pinned frontier expansion. An empty pair
+    graph yields the same one row with NULL nodes and zero counts.
     """
     und = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     start = und.agg(F.least(F.min("a"), F.min("b"))
                     .alias("m")).collect()[0]["m"]
+    if start is None:
+        return pairs.sparkSession.createDataFrame(
+            [(None, 0, None, 0, 0, 0)],
+            "start_node long, ecc_start long, far_node long, "
+            "diameter_lb long, n_reached long, truncated int")
     b1 = bfs_layers(pairs, lambda c: c == F.lit(start), hops=hops,
                     src=src, dst=dst)
     far_row = (b1.orderBy(F.col("dist").desc(), "doc_id")

@@ -11,9 +11,9 @@ Physical plan, annotated for the 100 TB case:
   -> dedup window over (conv_id, turn_idx)       | shuffle #1 (skew-proof key)
   -> parse (codegen) + enrich (broadcast join)   | no shuffle
   -> route (array+explode, codegen)              | no shuffle
-  -> write partitioned by (sink_name, bucket)    | shuffle #2 (repartition on
-                                                 |  write keys, salt-aware)
-  -> aggregates from written sinks               | shuffle #3 (partial agg)
+  -> write partitioned by (sink_name, bucket)    | no shuffle (writers keep
+                                                 |  the dedup partitioning)
+  -> aggregates from written sinks               | shuffle #2 (partial agg)
 
 Exactly one wide dependency per logical need; everything between
 shuffles is one whole-stage-codegen span.
@@ -108,8 +108,6 @@ def run_pipeline(
     num_buckets: int = 32,
     input_snapshot: str = "snap-0",
     run_id: str | None = None,
-    write_partitions: int | None = None,
-    write_salt: int = 1,
 ) -> PipelineResult:
     t0 = time.time()
     phase_secs: dict[str, float] = {}
@@ -122,18 +120,6 @@ def run_pipeline(
     n_done = done.count() if done is not None else 0
 
     routed = transform(pend.drop("bucket"), lookup_df, rules, num_buckets)
-    if write_partitions:
-        # distribution on the write keys so dynamic partition overwrite
-        # groups files per partition dir. write_salt > 1 additionally
-        # spreads a hot (sink, bucket) cell across that many writers —
-        # use it at scale when one cell outgrows a single task; at
-        # modest volume keep 1: every extra salt multiplies the sink
-        # FILE COUNT, and per-file metadata cost (open/commit/chmod,
-        # and the reader's footer+mmap churn) is the measured serial
-        # floor that caps scaling efficiency on many-small-file sinks.
-        salt = [F.pmod(F.hash("turn_idx"), F.lit(write_salt))] if write_salt > 1 else []
-        routed = routed.repartition(
-            write_partitions, "sink_name", "bucket", *salt)
     tw = time.time()
     # Observation metrics ride the WRITE action itself — transform-
     # stage counters (rows routed, text bytes) with no second scan
@@ -213,10 +199,9 @@ def run_pipeline(
               .select("sink_name", "n_rows", "n_distinct_conv").coalesce(1))
     roles = g.where(F.col("_gid") == 0b100).select(
         "sink_name", "role", F.col("n_rows").alias("n_turns")).coalesce(1)
-    catalog.drop(AGG_COUNTS_TABLE)
-    catalog.append(counts, AGG_COUNTS_TABLE)
-    catalog.drop(AGG_ROLES_TABLE)
-    catalog.append(roles, AGG_ROLES_TABLE)
+    # swapped in whole: a crash mid-write leaves the previous tables
+    catalog.replace(counts, AGG_COUNTS_TABLE)
+    catalog.replace(roles, AGG_ROLES_TABLE)
     phase_secs["aggregate_checkpoint"] = time.time() - ta
 
     secs = time.time() - t0

@@ -10,12 +10,13 @@ parquet fallback; treat the Iceberg code as a deployment template to
 be validated when a jar is available (drop it on the classpath and the
 same Catalog calls switch over).
 
-The pipeline only uses four verbs, all of which exist in both
+The pipeline only uses five verbs, all of which exist in both
 backends with the same semantics:
 
 - read(table)
 - append(df, table)
 - overwrite_partitions(df, table, partition_cols)  # idempotent resume
+- replace(df, table)  # whole-table publish, old copy live until swap
 - table_exists(table)  # the topic-exists probe analog
   (reference pkg/utils/kafka.go:9-28)
 
@@ -95,6 +96,35 @@ class Catalog:
     def _ident(self, table: str) -> str:
         return f"{self.catalog_name}.{table}"
 
+    def _swap(self, table: str, write) -> None:
+        """Parquet-fallback publish: `write(tmp)` fills a temp sibling
+        directory, then two renames swap it over the table path. The
+        previous copy stays on disk, readable, until the new one is
+        fully written, so a crash or lost executor mid-write never
+        loses the table (mode('overwrite') in place deletes the old
+        files BEFORE the write). Residual non-atomicity: between the
+        two renames the table path is briefly absent. The previous
+        copy must really be gone afterwards — a swallowed rmtree
+        failure would keep erased rows on disk and block the next
+        swap's rename — so that is verified, not assumed."""
+        import shutil
+
+        path = self._path(table)
+        tmp = f"{path}.tmp-{os.getpid()}"
+        old = f"{path}.old"
+        write(tmp)
+        shutil.rmtree(old, ignore_errors=True)
+        if not os.path.exists(path):
+            os.rename(tmp, path)
+            return
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(old):
+            raise OSError(
+                f"{table}: previous copy still present at {old} — "
+                "remove it manually")
+
     # -- verbs ---------------------------------------------------------
     def table_exists(self, table: str) -> bool:
         if self.iceberg:
@@ -148,6 +178,17 @@ class Catalog:
         (df.write.mode("overwrite").partitionBy(*partition_cols)
          .parquet(self._path(table)))
 
+    def replace(self, df: DataFrame, table: str) -> None:
+        """Replace the whole table with df, creating it if absent.
+        Readers see the previous rows until df is fully written: a
+        write that fails part-way leaves the old table in place. On
+        Iceberg this is ``writeTo(t).createOrReplace()`` (one atomic
+        snapshot swap); the parquet fallback is _swap."""
+        if self.iceberg:
+            df.writeTo(self._ident(table)).createOrReplace()
+            return
+        self._swap(table, df.write.mode("overwrite").parquet)
+
     def merge_upsert(self, df: DataFrame, table: str, keys: list[str],
                      order_col: str | None = None) -> None:
         """S5 Apply with the reference's FIELD-WISE merge semantics
@@ -155,15 +196,9 @@ class Catalog:
         control-plane-sized tables (rule/config/dimension) — the hot
         data path stays on overwrite_partitions. On Iceberg this is a
         single atomic MERGE INTO; the parquet fallback writes the
-        merged frame to a temp sibling directory and swaps it over the
-        table path with two renames — the source data survives on disk
-        (as `<path>.old`) until the new copy is fully written, so a
-        crash or lost executor mid-write can never lose the table
-        (mode('overwrite') in place would delete the old files BEFORE
-        the write, leaving only non-reliable localCheckpoint blocks).
-        Residual non-atomicity: between the two renames the table path
-        is briefly absent — acceptable for the control-plane tables
-        this verb serves; the data path uses overwrite_partitions."""
+        merged frame through _swap, so the source data outlives a
+        failed write (in place, mode('overwrite') would delete it
+        first, leaving only non-reliable localCheckpoint blocks)."""
         if not self.table_exists(table):
             if order_col is not None:
                 df = merge_frames(df.limit(0), df, keys, order_col)
@@ -180,17 +215,8 @@ class Catalog:
                 f"WHEN MATCHED THEN UPDATE SET {sets} "
                 f"WHEN NOT MATCHED THEN INSERT *")
             return
-        import shutil
-
-        path = self._path(table)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        old = f"{path}.old"
         merged = merge_frames(self.read(table), df, keys, order_col)
-        merged.write.mode("overwrite").parquet(tmp)  # old files still live
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
+        self._swap(table, merged.write.mode("overwrite").parquet)
 
     def compact(self, table: str, target_file_bytes: int = 128 << 20,
                 partition_cols: list[str] | None = None) -> int:
@@ -201,13 +227,10 @@ class Catalog:
         object stores, LIST storms). Sizing uses the table's actual
         on-disk bytes (no sampling); with `partition_cols` the rewrite
         repartitions on them so each hive partition lands contiguous
-        files. Crash-safe exactly like merge_upsert's fallback: write
-        to a temp sibling, two-rename swap, old data live until the new
+        files. Crash-safe through _swap: old data live until the new
         copy is complete. On Iceberg, prefer the engine's own
         rewrite_data_files action; this verb is the parquet-fallback
         equivalent."""
-        import shutil
-
         path = self._path(table)
         files = [os.path.join(dp, f) for dp, _, fs in os.walk(path)
                  for f in fs if f.endswith(".parquet")]
@@ -218,16 +241,10 @@ class Catalog:
             out = df.repartition(int(n_out), *partition_cols)
         else:
             out = df.repartition(int(n_out))
-        tmp = f"{path}.tmp-{os.getpid()}"
-        old = f"{path}.old"
         w = out.write.mode("overwrite")
         if partition_cols:
             w = w.partitionBy(*partition_cols)
-        w.parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
+        self._swap(table, w.parquet)
         return len([os.path.join(dp, f) for dp, _, fs in os.walk(path)
                     for f in fs if f.endswith(".parquet")])
 
@@ -235,14 +252,13 @@ class Catalog:
         """Targeted erasure (right-to-be-forgotten / S6 Delete at row
         granularity): rewrite `table` WITHOUT the rows matching
         `predicate` (a SQL boolean over the table's columns) and
-        return how many were erased. Crash-safe like merge_upsert's
-        fallback: the survivors are fully written to a temp sibling
-        before the two-rename swap, so the original data outlives any
-        mid-write failure. On Iceberg this is a single
-        `DELETE FROM ... WHERE` (position/equality deletes); the
-        parquet fallback pays one full rewrite — at 100 TB, partition
-        the table on the erasure key (e.g. user bucket) so the
-        rewrite touches only matching partitions via
+        return how many were erased. Crash-safe through _swap: the
+        survivors are fully written before the original is swapped
+        out, and the pre-erasure copy is verified gone. On Iceberg
+        this is a single `DELETE FROM ... WHERE` (position/equality
+        deletes); the parquet fallback pays one full rewrite — at
+        100 TB, partition the table on the erasure key (e.g. user
+        bucket) so the rewrite touches only matching partitions via
         overwrite_partitions instead.
 
         Counts come from one pass (conditional agg), survivors from a
@@ -253,31 +269,12 @@ class Catalog:
             self.spark.sql(
                 f"DELETE FROM {self._ident(table)} WHERE {predicate}")
             return n
-        import shutil
-
-        path = self._path(table)
         df = self.read(table)
         n = df.where(predicate).count()
         if n == 0:
             return 0
         survivors = df.where(f"NOT ({predicate})")
-        tmp = f"{path}.tmp-{os.getpid()}"
-        old = f"{path}.old"
-        survivors.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        # between these two renames the table path is briefly absent
-        # for concurrent readers; acceptable for this single-writer
-        # verb (Iceberg's DELETE branch above is the atomic path)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        # erasure verb: the pre-erasure copy MUST actually be gone —
-        # a swallowed rmtree failure would silently keep the "erased"
-        # rows on disk (round-3 ADVICE), so verify and raise.
-        shutil.rmtree(old)
-        if os.path.exists(old):
-            raise OSError(
-                f"erase_rows: pre-erasure copy still present at {old}; "
-                "erased rows remain on disk — remove it manually")
+        self._swap(table, survivors.write.mode("overwrite").parquet)
         return n
 
     def drop(self, table: str) -> None:

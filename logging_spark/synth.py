@@ -150,7 +150,7 @@ FIXTURE_RULES = [
 def rules(spark: SparkSession) -> DataFrame:
     # pandas -> Arrow path: list-of-rows createDataFrame evaluates via
     # pickled RDDs and forks a Python worker per core just to serve a
-    # 6-row table (profiled: 60 task-seconds blocked at local[32])
+    # 6-row table (profiled: 60 task-seconds blocked at 32 task threads)
     import pandas as pd
 
     cols = [f.name for f in S.RULES.fields]

@@ -3,7 +3,7 @@
 Usage (sandbox; on a cluster swap master/conf via spark-submit flags):
 
     python make_pyfiles.py   # builds dist/logging_spark.zip
-    spark-submit --master 'local[32]' --py-files dist/logging_spark.zip \
+    spark-submit --master 'local[4]' --py-files dist/logging_spark.zip \
         run_job.py --warehouse /tmp/wh --n-conversations 2000 \
         --turns-per-conv 100 --num-buckets 32 --snapshot snap-1
 
@@ -52,10 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--hot-factor", type=int, default=100)
     p.add_argument("--num-buckets", type=int, default=32)
     p.add_argument("--snapshot", default="snap-0")
-    p.add_argument("--write-partitions", type=int, default=None)
-    p.add_argument("--write-salt", type=int, default=1,
-                   help="writers per hot (sink,bucket) cell; >1 only at "
-                        "scale — each salt multiplies sink file count")
     p.add_argument("--predict", action="store_true",
                    help="print a pre-flight join-size/skew prediction "
                         "line (exact, from per-key counts) before "
@@ -174,8 +170,6 @@ def main(argv: list[str] | None = None) -> int:
         spark, turns, lookup, rules, cat,
         num_buckets=args.num_buckets,
         input_snapshot=args.snapshot,
-        write_partitions=args.write_partitions,
-        write_salt=args.write_salt,
     )
     wall = time.time() - t0
     counts = {r["sink_name"]: {"n_rows": r["n_rows"], "n_distinct_conv": r["n_distinct_conv"]}

@@ -199,6 +199,14 @@ def test_diameter_2sweep_matches_brute_force(spark):
         (start, m, far, max(d2.values()), len(d2), 0)
 
 
+def test_diameter_2sweep_empty_graph(spark):
+    from logging_spark.operators.cluster import diameter_2sweep
+
+    empty = spark.createDataFrame([], PAIRS_SCHEMA)
+    rows = diameter_2sweep(empty).collect()
+    assert [tuple(r) for r in rows] == [(None, 0, None, 0, 0, 0)]
+
+
 def test_diameter_2sweep_truncation_flag(spark):
     from pyspark.sql import Row
 

@@ -72,3 +72,24 @@ def test_build_surface_unchanged():
                  "agg_kmv_intersection", "window_rank_family",
                  "dim_topn_other", "dq_wilson_keep", "audit_fingerprint"):
         assert name in q, name
+
+
+def test_rotation_offset_reads_repo_root(monkeypatch, tmp_path):
+    """The driver-window offset counts CORRECTNESS_r*.json in the repo
+    root whatever the working directory is."""
+    from logging_spark.contract._window import _rotation_offset
+
+    monkeypatch.delenv("SPARK_GRAFT_ROTATION", raising=False)
+    monkeypatch.chdir(tmp_path)
+    root = Path(__file__).resolve().parents[1]
+    assert _rotation_offset() == len(list(root.glob("CORRECTNESS_r*.json")))
+
+
+def test_bench_core_tier_names_are_contract_queries():
+    """bench.CORE_TIER is the one hand-kept query list left in the
+    harness; every name in it must stay a contract query."""
+    import bench
+    import logging_spark.contract as c
+
+    missing = set(bench.CORE_TIER) - set(c.build_queries())
+    assert not missing, sorted(missing)

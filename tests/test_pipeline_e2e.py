@@ -75,21 +75,52 @@ def test_routed_text_equality_under_ordering(run):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_write_salt_invariant(spark, fixtures, run, tmp_path_factory):
-    """write_salt only changes HOW rows are distributed to writer
-    tasks (and hence sink file counts) — never what is written. A
-    salted run must produce identical per-sink counts and rollups."""
+def _shuffles_and_broadcasts(node) -> tuple[int, int]:
+    """(shuffle exchanges outside broadcast build sides, broadcast
+    exchanges) in a physical plan tree. A build side is a few rows by
+    construction; the shuffles that move the fact table are the rest."""
+    name = node.nodeName()
+    if name == "BroadcastExchange":
+        return 0, 1
+    if name == "AdaptiveSparkPlan":
+        return _shuffles_and_broadcasts(node.executedPlan())
+    shuffles, broadcasts = int(name == "Exchange"), 0
+    kids = node.children()
+    for i in range(kids.size()):
+        s, b = _shuffles_and_broadcasts(kids.apply(i))
+        shuffles, broadcasts = shuffles + s, broadcasts + b
+    return shuffles, broadcasts
+
+
+def test_single_write_path_plan(spark, fixtures, tmp_path):
+    """The routed DataFrame handed to the sink write carries exactly
+    one shuffle exchange — the dedup window — while the enrich join
+    and the checkpoint anti-join are broadcasts."""
+    from logging_spark.sources import checkpoint as ckpt
+
+    class RecordingCatalog(Catalog):
+        written = None
+
+        def overwrite_partitions(self, df, table, partition_cols):
+            self.written = df
+            super().overwrite_partitions(df, table, partition_cols)
+
     turns, lookup, rules = fixtures
-    cat_ref, res_ref, _, _ = run
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh_salt")))
+    # scan committed files as the job does in production: one scan,
+    # not the generator's union of branches
+    turns.write.parquet(str(tmp_path / "turns"))
+    turns = spark.read.parquet(str(tmp_path / "turns"))
+    cat = RecordingCatalog(spark, str(tmp_path / "wh"))
+    # bucket 0 already committed: the resume anti-join is in the plan
+    ckpt.record_done(cat, spark.createDataFrame(
+        [(0, 1, 0)], "bucket int, row_count long, parse_errors long"), "plan-1")
     res = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
-                       write_partitions=16, write_salt=4)
-    ref = res_ref.per_sink_counts.orderBy("sink_name").collect()
-    got = res.per_sink_counts.orderBy("sink_name").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in ref]
-    ref_roles = res_ref.role_rollup.orderBy("sink_name", "role").collect()
-    got_roles = res.role_rollup.orderBy("sink_name", "role").collect()
-    assert [tuple(r) for r in got_roles] == [tuple(r) for r in ref_roles]
+                       input_snapshot="plan-1")
+    assert res.buckets_skipped == 1
+    plan = cat.written._jdf.queryExecution().executedPlan()
+    text = plan.toString()
+    assert _shuffles_and_broadcasts(plan) == (1, 2), text
+    assert "Exchange hashpartitioning(conv_id" in text, text
 
 
 def test_enrich_defaults_on_miss(spark, fixtures):

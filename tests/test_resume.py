@@ -182,3 +182,26 @@ def test_erase_rows_right_to_be_forgotten(spark, tmp_path):
     # NULL-safe: predicate false/NULL rows survive; repeat is a no-op
     assert cat.erase_rows("sink.events", "user = 'bob'") == 0
     assert cat.read("sink.events").count() == 20
+
+
+def test_replace_failed_write_keeps_previous_table(spark, tmp_path):
+    """Catalog.replace publishes the aggregate tables: a DataFrame that
+    fails part-way through its write must leave the previous table
+    readable with its old rows, and a good replace leaves no debris."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    schema = "k string, n long"
+    cat.replace(spark.createDataFrame([("a", 1), ("b", 2)], schema), "agg.t")
+    bad = spark.range(0, 1000, 1, 8).select(
+        F.when(F.col("id") < 500, F.lit("x"))
+        .otherwise(F.raise_error(F.lit("boom"))).alias("k"),
+        F.col("id").alias("n"))
+    with pytest.raises(Exception, match="boom"):
+        cat.replace(bad, "agg.t")
+    rows = sorted(tuple(r) for r in cat.read("agg.t").collect())
+    assert rows == [("a", 1), ("b", 2)]
+
+    cat.replace(spark.createDataFrame([("c", 3)], schema), "agg.t")
+    assert [tuple(r) for r in cat.read("agg.t").collect()] == [("c", 3)]
+    assert not os.path.exists(cat._path("agg.t") + ".old")
