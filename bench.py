@@ -3,7 +3,12 @@
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "throughput": {...}}
+   "queries": {name: sec, ...}, "query_metrics": {name: {...}, ...},
+   "plan_regressions": [...], "sf": ..., "throughput": {...}}
+
+query_metrics holds, per query, the best repeat's wall and its stage
+totals over every job it ran (logging_spark/obs.py), plus
+exchanges_all_jobs: the shuffle exchanges of all its SQL executions.
 
 `--tier core` (the default) times CORE_TIER; `--tier full` times every
 query of contract.build_queries(). Each query is forced end-to-end
@@ -21,6 +26,7 @@ import subprocess
 import sys
 import time
 
+from logging_spark import obs
 from logging_spark.session import default_parallelism
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -64,17 +70,8 @@ CORE_TIER = [
     "agg_kmv_audit", "dq_score_auc", "audit_fingerprint",
 ]
 
-
-def _plan_exchanges(df) -> int:
-    """Count true shuffle exchanges in the pre-AQE physical plan —
-    hash/range/SinglePartition only; BroadcastExchange moves no
-    shuffle data and ReusedExchange was already counted once (the
-    tools/plan_audit.py convention)."""
-    import re
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return len(re.findall(
-        r"(?<![A-Za-z])Exchange (?:hashpartitioning|"
-        r"rangepartitioning|SinglePartition)", plan))
+# artifact name per tier: runs are diffed only against the same tier
+_TAG = {"core": "headline_core", "full": "headline"}
 
 
 def run_suite(cpus: int, repeats: int = 3, tier: str = "core") -> dict:
@@ -101,27 +98,35 @@ def run_suite(cpus: int, repeats: int = 3, tier: str = "core") -> dict:
     # alongside so regressions are distinguishable from noise.
     suite = CORE_TIER if tier == "core" else list(queries)
     samples: dict[str, list[float]] = {name: [] for name in suite}
-    for _ in range(repeats):
+    profile: dict[str, dict] = {}  # best repeat's wall + stage totals
+    fewest: dict[str, int] = {}
+    for rep in range(repeats):
         for name in suite:
+            group = f"{name}#{rep}"
             # time the BUILD too: iterative operators (dedup_cluster's
             # CC rounds) do their real work eagerly at build time via
             # localCheckpoint — timing only the final noop write would
             # hide them
-            t0 = time.time()
-            df = queries[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(round(time.time() - t0, 3))
+            with obs.group(spark, group):
+                t0 = time.time()
+                df = queries[name](spark, SF_DIR)
+                df.write.format("noop").mode("overwrite").save()
+                wall = round(time.time() - t0, 3)
+            samples[name].append(wall)
             spark.catalog.clearCache()  # operators cache intermediates; isolate queries
-    # record each query's shuffle-exchange count (pre-AQE physical
-    # plan, no execution) so plan-shape regressions land in the bench
-    # artifact — the repo's plan guards caught three double-lineage
-    # subtrees the day they were written; this makes that continuous
-    plan_ex = {}
-    for name in suite:
-        try:
-            plan_ex[name] = _plan_exchanges(queries[name](spark, SF_DIR))
-        except Exception:  # noqa: BLE001 — plan audit must not fail the bench
-            plan_ex[name] = None
+            # every job the repeat ran, localCheckpoint ones included.
+            # The exchange count is the fewest any repeat ran: the
+            # first repeat also builds the shared contract fixtures
+            # (memo), and AQE's exchange reuse is timing-dependent
+            # (docs_link_prediction runs 6 or, now and then, 7), while
+            # a real plan regression adds shuffles to every repeat
+            m = obs.metrics(spark, group)
+            exchanges = m.pop("exchanges")
+            fewest[name] = min(fewest.get(name, exchanges), exchanges)
+            if name not in profile or wall < profile[name]["wall"]:
+                profile[name] = {"wall": wall, **m}
+    for name, ex in fewest.items():
+        profile[name]["exchanges_all_jobs"] = ex
     import statistics
     best = {n: min(s) for n, s in samples.items()}
     med = {n: round(statistics.median(s), 3) for n, s in samples.items()}
@@ -139,7 +144,7 @@ def run_suite(cpus: int, repeats: int = 3, tier: str = "core") -> dict:
         "queries_median": {n: med[n] for n in core},
         "value_median": round(sum(med[n] for n in core), 3),
         "tier": tier,
-        "plan_exchanges": plan_ex,
+        "query_metrics": profile,
         "sf": SF_DIR,
         "cpus": cpus,
         "throughput": {
@@ -152,20 +157,22 @@ def run_suite(cpus: int, repeats: int = 3, tier: str = "core") -> dict:
         out["full_value_median"] = round(sum(med.values()), 3)
         out["full_queries"] = best
         out["full_queries_median"] = med
-    # diff plan shapes vs the previous artifact: a grown exchange
-    # count is a silent scale regression even when wall time hides it
+    # diff plan shapes vs the same tier's previous artifact: a grown
+    # exchange count is a silent scale regression even when wall time
+    # hides it. Artifacts without all-jobs counts give no comparison.
     prev_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "bench_results", "headline_latest.json")
-    regress = []
+                             "bench_results", f"{_TAG[tier]}_latest.json")
     try:
         with open(prev_path) as f:
-            prev = json.load(f).get("plan_exchanges", {})
-        for n, v in plan_ex.items():
-            pv = prev.get(n)
-            if pv is not None and v is not None and v > pv:
-                regress.append({"query": n, "was": pv, "now": v})
+            prev = json.load(f).get("query_metrics", {})
     except (OSError, json.JSONDecodeError):
-        pass
+        prev = {}
+    regress = []
+    for n, rec in profile.items():
+        was = prev.get(n, {}).get("exchanges_all_jobs")
+        if was is not None and rec["exchanges_all_jobs"] > was:
+            regress.append({"query": n, "was": was,
+                            "now": rec["exchanges_all_jobs"]})
     out["plan_regressions"] = regress
     if regress:
         print(f"WARNING: shuffle-exchange count grew for "
@@ -403,7 +410,7 @@ def main() -> int:
         tier = sys.argv[sys.argv.index("--tier") + 1]
         assert tier in ("core", "full"), tier
     out = run_suite(default_parallelism(), repeats=repeats, tier=tier)
-    _persist("headline" if tier != "core" else "headline_core", out)
+    _persist(_TAG[tier], out)
     print(json.dumps(out))
     return 0
 

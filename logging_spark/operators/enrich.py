@@ -30,7 +30,7 @@ DEFAULTS = {
 AUTO_BROADCAST_MAX_ROWS = 5_000_000  # ~500 MB of dim rows; beyond this
 # a forced broadcast evicts executor memory and the shuffle join wins
 
-# "auto" decision cache: (applicationId, dim plan's semanticHash) ->
+# broadcast decision cache: (applicationId, dim plan's semanticHash) ->
 # row count. A pipeline run (and the bench loop) calls enrich with the
 # SAME dimension plan many times; without this each call pays a full
 # dim scan just to re-learn the size. Keyed on the SEMANTIC hash, so
@@ -40,39 +40,28 @@ AUTO_BROADCAST_MAX_ROWS = 5_000_000  # ~500 MB of dim rows; beyond this
 _DIM_SIZE_CACHE: dict[tuple[str, int], int] = {}
 
 
-def _dim_rows(dim: DataFrame, dim_rows: int | None) -> int:
-    if dim_rows is not None:
-        return dim_rows
-    try:
-        key = (dim.sparkSession.sparkContext.applicationId, dim.semanticHash())
-    except Exception:  # pragma: no cover — semanticHash unsupported
-        return dim.count()
+def _dim_rows(dim: DataFrame) -> int:
+    key = (dim.sparkSession.sparkContext.applicationId, dim.semanticHash())
     if key not in _DIM_SIZE_CACHE:
         _DIM_SIZE_CACHE[key] = dim.count()
     return _DIM_SIZE_CACHE[key]
 
 
-def enrich(turns: DataFrame, lookup: DataFrame,
-           broadcast: bool | str = "auto",
-           dim_rows: int | None = None) -> DataFrame:
+def enrich(turns: DataFrame, lookup: DataFrame) -> DataFrame:
     """Left-join metadata on (conv_id, tool); null-tool rows (the
     missing-`app`-label analog, pod.go:32-35) never match and keep
     defaults. Dimension-side columns are pruned to what we attach.
 
-    broadcast: True forces a broadcast join, False leaves the strategy
-    to Catalyst/AQE (shuffle join for big dims), "auto" (default)
-    counts the dim once PER SESSION (cached on the dim plan's semantic
-    hash; pass `dim_rows` when the caller already knows the size, e.g.
-    from catalog metadata/file footers) and broadcasts only when it
-    fits. At pod-inventory scale the dim always broadcasts; at
-    10^12-turn scale with ~10^9 conversations the dim side outgrows
-    any executor and MUST shuffle, which "auto" gets right without the
-    caller knowing the size."""
+    The dim is counted once PER SESSION (cached on the dim plan's
+    semantic hash) and broadcast only when it fits under
+    AUTO_BROADCAST_MAX_ROWS; otherwise Catalyst/AQE pick the join. At
+    pod-inventory scale the dim always broadcasts; at 10^12-turn scale
+    with ~10^9 conversations the dim side outgrows any executor and
+    MUST shuffle, which this gets right without the caller knowing
+    the size."""
     dim = lookup.select("conv_id", "tool", "namespace", "pod_name",
                         "node_name", "service_name")
-    if broadcast == "auto":
-        broadcast = _dim_rows(dim, dim_rows) <= AUTO_BROADCAST_MAX_ROWS
-    if broadcast:
+    if _dim_rows(dim) <= AUTO_BROADCAST_MAX_ROWS:
         dim = F.broadcast(dim)
     joined = turns.join(dim, on=["conv_id", "tool"], how="left")
     for col, default in DEFAULTS.items():

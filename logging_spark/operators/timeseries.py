@@ -207,12 +207,15 @@ def holt_fold(df: DataFrame, key: str, order_col: str, value_col: str,
         f"(acc, x) -> named_struct("
         f"'l', {lnew}, "
         f"'b', ({b} * ({lnew} - acc.l) + {1000 - b} * acc.b) DIV 1000))")
+    # bind the fold ONCE as a struct column (Catalyst does not inline
+    # a non-cheap expression into each of several references)
     return (pts.where(F.size("_xs") >= 2)
-            .select(key,
-                    F.size("_xs").cast("long").alias("n_points"),
-                    F.expr(f"CAST({fold}.l AS BIGINT)").alias("level_x1000"),
-                    F.expr(f"CAST({fold}.b AS BIGINT)").alias("trend_x1000"),
-                    F.expr(f"CAST({fold}.l + {fold}.b AS BIGINT)")
+            .select(key, F.size("_xs").cast("long").alias("n_points"),
+                    F.expr(fold).alias("_f"))
+            .select(key, "n_points",
+                    F.expr("CAST(_f.l AS BIGINT)").alias("level_x1000"),
+                    F.expr("CAST(_f.b AS BIGINT)").alias("trend_x1000"),
+                    F.expr("CAST(_f.l + _f.b AS BIGINT)")
                      .alias("forecast_x1000")))
 
 
@@ -630,14 +633,14 @@ def holt_winters_fold(df: DataFrame, key: str, order_col: str,
         f"'l', {lnew}, "
         f"'b', ({bb} * ({lnew} - acc.l) + {1000 - bb} * acc.b) DIV 1000, "
         f"'s', concat(slice(acc.s, 2, {m - 1}), array({snew}))))")
+    # one fold per key, bound as a struct column (see holt_fold)
     return (pts.where(F.size("_xs") >= 2 * m)
-            .select(key,
-                    F.size("_xs").cast("long").alias("n_points"),
-                    F.expr(f"CAST({fold}.l AS BIGINT)")
-                    .alias("level_x1000"),
-                    F.expr(f"CAST({fold}.b AS BIGINT)")
-                    .alias("trend_x1000"),
-                    F.expr(f"CAST({fold}.s[0] AS BIGINT)")
+            .select(key, F.size("_xs").cast("long").alias("n_points"),
+                    F.expr(fold).alias("_f"))
+            .select(key, "n_points",
+                    F.expr("CAST(_f.l AS BIGINT)").alias("level_x1000"),
+                    F.expr("CAST(_f.b AS BIGINT)").alias("trend_x1000"),
+                    F.expr("CAST(_f.s[0] AS BIGINT)")
                     .alias("season_next_x1000"),
-                    F.expr(f"CAST({fold}.l + {fold}.b + {fold}.s[0] "
-                           f"AS BIGINT)").alias("forecast_x1000")))
+                    F.expr("CAST(_f.l + _f.b + _f.s[0] AS BIGINT)")
+                    .alias("forecast_x1000")))

@@ -65,9 +65,7 @@ def build_session(
     shuffle_partitions = shuffle_partitions or max(cores * 2, 8)
     # Sandbox/local-mode tuning (harmless on a real cluster where
     # spark-submit --conf overrides): shuffle spill dirs on tmpfs when
-    # available (the VM's virtio disk serializes concurrent writers),
-    # and throughput-oriented GC — G1's concurrent phases contend
-    # badly with 32 task threads on this hypervisor (40% sys time).
+    # available (a virtio disk serializes concurrent writers).
     local_dir = None
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         local_dir = "/dev/shm/spark-local"
@@ -122,11 +120,11 @@ def build_session(
     builder = builder.config("spark.sql.parquet.compression.codec", "zstd")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    # NB: driver JVM options (e.g. -XX:+UseParallelGC) CANNOT be set
-    # here — in client/local mode the driver JVM is already running by
-    # the time builder confs apply. The GC choice only takes effect via
-    # spark-submit --conf spark.driver.extraJavaOptions=... (bench.py
-    # passes it; plain `python` runs keep the JVM default GC).
+    # NB: driver JVM options (e.g. a GC choice) CANNOT be set here —
+    # in client/local mode the driver JVM is already running by the
+    # time builder confs apply; they take effect only via spark-submit
+    # --conf spark.driver.extraJavaOptions=... Nothing in this repo
+    # passes one, so every run uses the JVM's default GC.
     # spark-submit's explicit conf wins over every module default above
     for k, v in submit_conf.items():
         builder = builder.config(k, v)

@@ -10,7 +10,9 @@ Usage (sandbox; on a cluster swap master/conf via spark-submit flags):
 Input defaults to the deterministic synthetic transcript generator
 (seeded, distributed); pass --input-parquet to run on a real table
 with the input_hint schema (conv_id, turn_idx, role, text, tool, ts).
-Prints one JSON line with run stats + per-sink counts.
+Prints one JSON line with run stats, per-sink counts and the job's
+stage profile (logging_spark/obs.py): `stage_metrics` totals and
+`stages` rows, widest span first.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import argparse
 import json
 import sys
 import time
+import uuid
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -77,7 +80,7 @@ def main(argv: list[str] | None = None) -> int:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    from logging_spark import synth
+    from logging_spark import obs, synth
     from pyspark.sql import functions as F
     from logging_spark.plans.job import run_pipeline
     from logging_spark.sources.catalog import Catalog
@@ -165,12 +168,15 @@ def main(argv: list[str] | None = None) -> int:
         (transform(wslice, lookup, load_rules(rules), num_buckets=args.num_buckets)
          .write.format("noop").mode("overwrite").save())
 
+    run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
-    res = run_pipeline(
-        spark, turns, lookup, rules, cat,
-        num_buckets=args.num_buckets,
-        input_snapshot=args.snapshot,
-    )
+    with obs.group(spark, run_id):
+        res = run_pipeline(
+            spark, turns, lookup, rules, cat,
+            num_buckets=args.num_buckets,
+            input_snapshot=args.snapshot,
+            run_id=run_id,
+        )
     wall = time.time() - t0
     counts = {r["sink_name"]: {"n_rows": r["n_rows"], "n_distinct_conv": r["n_distinct_conv"]}
               for r in res.per_sink_counts.collect()}
@@ -183,6 +189,9 @@ def main(argv: list[str] | None = None) -> int:
         "buckets_processed": res.buckets_processed,
         "buckets_skipped": res.buckets_skipped,
         "per_sink_counts": counts,
+        "stage_metrics": obs.metrics(spark, run_id),
+        "stages": sorted(obs.stages(spark, run_id),
+                         key=lambda r: -r["span_s"]),
     }))
 
     if args.export_jsonl:

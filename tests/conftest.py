@@ -12,7 +12,6 @@ from logging_spark.session import build_session  # noqa: E402
 def spark():
     s = build_session(
         app_name="logging-spark-tests",
-        cores=int(os.environ.get("TEST_CORES", "8")),
         shuffle_partitions=8,
         extra_conf={"spark.driver.memory": "4g"},
     )

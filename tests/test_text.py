@@ -135,14 +135,6 @@ def test_enrich_auto_counts_dim_once_per_plan(spark):
     finally:
         cls.count = orig
     assert calls["n"] == 1
-    # explicit size skips the scan entirely
-    E._DIM_SIZE_CACHE.clear()
-    cls.count = counting
-    try:
-        E.enrich(turns, lookup, dim_rows=1).collect()
-    finally:
-        cls.count = orig
-    assert calls["n"] == 1
 
 
 def test_ngram_repetition_counts(spark):
