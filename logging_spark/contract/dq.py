@@ -779,7 +779,9 @@ FROM s WHERE rel_total > 0"""
 
     # conformal: ceil((n+1)*(1-alpha)) via (x + 1e6 - 1) // 1e6 on ppm;
     # DuckDB's default ORDER BY window frame is RANGE, which groups
-    # tied scores exactly like the collapsed-value prefix sum
+    # tied scores exactly like the collapsed-value prefix sum. A source
+    # with k > n_cal keeps its row with NULL q_hat and NULL coverage,
+    # as the operator's LEFT join does
     o["dq_conformal_coverage"] = """
 WITH scored AS (
   SELECT source, CAST(n_chars * 1000 + doc_id % 997 AS BIGINT) AS s,
@@ -800,12 +802,12 @@ cum AS (SELECT source, s,
         FROM per),
 q AS (SELECT kk.source, kk.n_cal, kk.k,
              CAST(min(cum.s) AS BIGINT) AS q_hat
-      FROM cum JOIN kk ON cum.source = kk.source AND cum.cum >= kk.k
+      FROM kk LEFT JOIN cum ON cum.source = kk.source AND cum.cum >= kk.k
       GROUP BY 1, 2, 3),
 t AS (SELECT source, s FROM scored WHERE half = 1)
 SELECT q.source, n_cal, k, q_hat,
        CAST(count(*) AS BIGINT) AS n_test,
-       CAST((sum(CASE WHEN t.s <= q_hat THEN 1 ELSE 0 END) * 1000000)
+       CAST((sum(CAST(t.s <= q_hat AS BIGINT)) * 1000000)
             // count(*) AS BIGINT) AS coverage_ppm,
        CAST(900000 AS BIGINT) AS target_ppm
 FROM t JOIN q ON t.source = q.source

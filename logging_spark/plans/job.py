@@ -3,19 +3,20 @@
 This is the Spark re-expression of the reference's whole data path
 (SURVEY §3): rule compile (driver) -> scan/parse/enrich/route
 (executors, one codegen stage up to the shuffle) -> bucketed sink
-write -> aggregates recomputed from the sink tables.
+write -> aggregates recomputed from the committed sink cells.
 
 Physical plan, annotated for the 100 TB case:
 
-  scan (columnar, filter/prune pushed)           | no shuffle
+  scan + `bucket IN owned` (literal filter)      | no shuffle
   -> dedup window over (conv_id, turn_idx)       | shuffle #1 (skew-proof key)
   -> parse (codegen) + enrich (broadcast join)   | no shuffle
   -> route (array+explode, codegen)              | no shuffle
   -> write partitioned by (sink_name, bucket)    | no shuffle (writers keep
                                                  |  the dedup partitioning)
-  -> aggregates from written sinks               | shuffle #2 (partial agg)
+  -> per-bucket stats of the owned cells         | small shuffles over the
+                                                 |  pruned cells only
 
-Exactly one wide dependency per logical need; everything between
+Exactly one wide dependency over the input; everything between
 shuffles is one whole-stage-codegen span.
 
 Sinks: ONE table partitioned by (sink_name, bucket) rather than k
@@ -25,11 +26,19 @@ single pass, and a "sink table" is a partition subtree readers prune
 to — the moral equivalent of the reference's topic-per-service
 (server.go:131) with auto-creation (kafka.go:30-56).
 
-Resume: buckets already checkpointed for this input snapshot are
-anti-joined away; bucket writes are overwrite-by-partition, so
-re-running a half-finished bucket is idempotent. Aggregates are
-ALWAYS recomputed from the sink table, never incremented (SURVEY §7
-hard-parts) — exact counts under resume.
+Resume: the driver collects the snapshot's done checkpoint rows once;
+owned = range(B) - done is the run's only bucket decision. The run
+reads only owned buckets' input, clears every `*/bucket=b` cell of
+them, writes them back, and appends their stats as their done rows
+(sources/checkpoint.py). A bucket whose new output lost a sink keeps
+no stale cell, and a crash before the final append leaves the bucket
+owned for the next run.
+
+Aggregates: per-bucket stats are recomputed from the committed cells
+(SURVEY §7 hard-parts), never incremented; agg.* are sums over the
+snapshot's done rows. A conversation lives in exactly one bucket, so
+distinct-conversation counts add up across buckets exactly, and the
+aggregate step reads only the cells this run wrote.
 """
 
 from __future__ import annotations
@@ -38,7 +47,8 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logging_spark.functions.parse import parse_turns
@@ -53,6 +63,8 @@ ROUTED_TABLE = "sinks.routed"
 AGG_COUNTS_TABLE = "agg.per_sink_counts"
 AGG_ROLES_TABLE = "agg.per_sink_role_rollup"
 METRICS_TABLE = "meta.metrics"
+AGG_COUNTS_SCHEMA = "sink_name string, n_rows long, n_distinct_conv long"
+AGG_ROLES_SCHEMA = "sink_name string, role string, n_turns long"
 
 ROUTED_COLS = [
     "sink_name", "bucket", "conv_id", "turn_idx", "role", "text", "tool", "ts",
@@ -99,6 +111,30 @@ def transform(
     return routed.select(*ROUTED_COLS)
 
 
+def _bucket_stats(cells: DataFrame) -> pd.DataFrame:
+    """Committed sink cells -> per-(bucket, sink_name, role) n_rows and
+    parse_errors, with the per-(bucket, sink_name) distinct-conversation
+    count on each role row (ckpt.STATS_COLS), collected on the driver:
+    at most buckets x sinks x roles rows."""
+    per_conv = cells.groupBy("bucket", "sink_name", "conv_id", "role").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("level").isNull().cast("long")).alias("errors"))
+    roles = per_conv.groupBy("bucket", "sink_name", "role").agg(
+        F.sum("n").alias("n_rows"), F.sum("errors").alias("parse_errors"))
+    convs = per_conv.groupBy("bucket", "sink_name").agg(
+        F.countDistinct("conv_id").alias("n_distinct_conv"))
+    return roles.join(convs, ["bucket", "sink_name"]).select(*ckpt.STATS_COLS).toPandas()
+
+
+def _frame(spark: SparkSession, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """A handful of driver rows as a one-partition frame (one file per
+    write). pandas -> Arrow createDataFrame converts on the driver: a
+    list-of-rows createDataFrame goes through pickled-RDD evaluation,
+    and a cold Python worker fork costs seconds per tiny bookkeeping
+    write (profiled: a 4.9 s single-task stage at ~0 CPU)."""
+    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
+
+
 def run_pipeline(
     spark: SparkSession,
     turns: DataFrame,
@@ -114,94 +150,50 @@ def run_pipeline(
     run_id = run_id or uuid.uuid4().hex[:12]
     rules = load_rules(rules_df)
 
-    bucketed = ckpt.with_bucket(turns, num_buckets)
-    pend = ckpt.pending(bucketed, catalog, input_snapshot)
-    done = ckpt.completed_buckets(catalog, input_snapshot)
-    n_done = done.count() if done is not None else 0
+    # the run's one bucket decision: owned = range(B) - done. It drives
+    # the input filter, the cell clear, the stats read-back and the
+    # done rows this run appends.
+    done = ckpt.done_rows(catalog, input_snapshot)
+    owned = ckpt.owned(done, num_buckets)
+    pend = ckpt.with_bucket(turns, num_buckets).where(F.col("bucket").isin(owned))
 
     routed = transform(pend.drop("bucket"), lookup_df, rules, num_buckets)
     tw = time.time()
     # Observation metrics ride the WRITE action itself — transform-
     # stage counters (rows routed, text bytes) with no second scan
-    # and no extra action. These are telemetry; the EXACT accounting
-    # below still recomputes from the committed table (resume
-    # invariant), so a partially-failed write can never leak observed
-    # numbers into the aggregates.
-    from pyspark.sql import Observation
+    # and no extra action. These are telemetry; the exact counts
+    # below are recomputed from the committed cells.
     obs = Observation(f"routed_{run_id}")
     routed = routed.observe(obs,
                             F.count(F.lit(1)).alias("rows_routed"),
                             F.sum(F.length("text")).alias("text_chars"))
+    # overwrite_partitions replaces only the cells present in routed:
+    # empty every owned cell first, so a bucket whose new output lost
+    # a sink (shrunk input, disabled rule) keeps no stale rows there
+    catalog.clear_partitions(ROUTED_TABLE, "bucket", owned)
     catalog.overwrite_partitions(routed, ROUTED_TABLE, ["sink_name", "bucket"])
     phase_secs["transform_write"] = time.time() - tw
     observed = {k: int(v or 0) for k, v in obs.get.items()}
 
-    # lineage + aggregates recomputed FROM THE WRITTEN TABLE: what was
-    # committed is what is counted (exactness under resume/crash).
-    # ONE grouping-sets pass over the committed table produces all
-    # three aggregate shapes (per-bucket lineage, per-sink counts,
-    # per-(sink,role) rollup) instead of three separate scans — the
-    # expand is map-side-combined, so the shuffle carries pre-reduced
-    # rows, and the committed data is read exactly once.
+    # stats recomputed FROM THE COMMITTED CELLS of the owned buckets
+    # (partition-pruned), appended as their done rows; the aggregates
+    # are sums over the snapshot's done rows, prior and new.
     ta = time.time()
-    sink_table = catalog.read(ROUTED_TABLE)
-    # Counts WITHOUT the distinct: a grouping-sets pass that is fully
-    # map-side combinable — the exchange carries (bucket/sink/role)
-    # cardinality, not rows. countDistinct used to ride in this same
-    # pass, but a distinct-aggregate cannot map-side combine under an
-    # expand: the shuffle carried 3x the table's (group, conv_id)
-    # pairs, and the phase stopped scaling with cores (measured 21-24s
-    # flat from 4->16 threads at 32M turns). Only the per-sink shape
-    # needs a distinct, so it gets its own cheap pass below.
-    g = (
-        sink_table.groupingSets(
-            [["bucket"], ["sink_name"], ["sink_name", "role"]],
-            "bucket", "sink_name", "role",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col("level").isNull(), 1).otherwise(0)).alias("parse_errors"),
-            F.grouping_id("bucket", "sink_name", "role").alias("_gid"),
-        )
-        # materialize NOW, in parallel, before the coalesce(1) slice
-        # writes below: a lazy persist would first materialize under a
-        # coalesce(1) plan, collapsing the whole sink scan + agg into
-        # one task (profiled as a 5 s single-task stage). localCheckpoint
-        # blocks are auto-dropped by the ContextCleaner — no unpersist
-        # bookkeeping in long-lived sessions.
-        .localCheckpoint(eager=True)
-    )
-    # Exact per-sink distinct-conv count as dedup-then-count: the
-    # distinct shuffles short (sink_name, conv_id) pairs after local
-    # dedup — ~n_convs x n_sinks rows instead of 3x all rows. Column
-    # pruning keeps this second scan to two columns.
-    dconv = (
-        sink_table.select("sink_name", "conv_id").distinct()
-        .groupBy("sink_name")
-        .agg(F.count(F.lit(1)).alias("n_distinct_conv"))
-        .localCheckpoint(eager=True)
-    )
-    # grouping_id bit k set = that column aggregated away
-    stats = g.where(F.col("_gid") == 0b011).select(
-        "bucket", F.col("n_rows").alias("row_count"), "parse_errors")
-    new_stats = stats
-    if done is not None:
-        new_stats = stats.join(F.broadcast(done), "bucket", "left_anti")
-    ckpt.record_done(catalog, new_stats, input_snapshot)
-
-    # aggregate outputs are a handful of rows — coalesce(1) so each
-    # table is ONE file, not shuffle_partitions near-empty ones (local
-    # FS file ops fork subprocesses without native libhadoop; small
-    # files are pure overhead on any FS)
-    counts = (g.where(F.col("_gid") == 0b101)
-              .select("sink_name", "n_rows")
-              .join(dconv, "sink_name")
-              .select("sink_name", "n_rows", "n_distinct_conv").coalesce(1))
-    roles = g.where(F.col("_gid") == 0b100).select(
-        "sink_name", "role", F.col("n_rows").alias("n_turns")).coalesce(1)
+    # no routed rows means no committed owned cell (and perhaps no
+    # table to read yet)
+    new = (_bucket_stats(catalog.read(ROUTED_TABLE).where(F.col("bucket").isin(owned)))
+           if observed.get("rows_routed") else done.iloc[:0])
+    ckpt.record_done(catalog, new, input_snapshot)
+    rows = pd.concat([done, new]).astype(
+        {"n_rows": "int64", "parse_errors": "int64", "n_distinct_conv": "int64"})
+    convs = rows.drop_duplicates(["bucket", "sink_name"])
+    counts = (rows.groupby("sink_name", as_index=False)["n_rows"].sum()
+              .merge(convs.groupby("sink_name", as_index=False)["n_distinct_conv"].sum()))
+    roles = (rows.groupby(["sink_name", "role"], as_index=False, dropna=False)["n_rows"]
+             .sum().rename(columns={"n_rows": "n_turns"}))
     # swapped in whole: a crash mid-write leaves the previous tables
-    catalog.replace(counts, AGG_COUNTS_TABLE)
-    catalog.replace(roles, AGG_ROLES_TABLE)
+    catalog.replace(_frame(spark, counts, AGG_COUNTS_SCHEMA), AGG_COUNTS_TABLE)
+    catalog.replace(_frame(spark, roles, AGG_ROLES_SCHEMA), AGG_ROLES_TABLE)
     phase_secs["aggregate_checkpoint"] = time.time() - ta
 
     secs = time.time() - t0
@@ -210,23 +202,16 @@ def run_pipeline(
         for phase, s in phase_secs.items()
     ] + [(run_id, f"observe:{k}", input_snapshot, v, None)
          for k, v in observed.items()]
-    # pandas -> Arrow createDataFrame: driver-side conversion, no
-    # Python executor workers. A list-of-rows createDataFrame goes
-    # through pickled-RDD evaluation, and a cold Python worker fork
-    # under 32 task threads costs seconds per tiny bookkeeping write
-    # (profiled: a 4.9 s single-task stage at ~0 CPU).
-    import pandas as pd
-    metrics = spark.createDataFrame(
-        pd.DataFrame(phase_rows,
-                     columns=["run_id", "phase", "key", "rows", "seconds"]),
-        schema="run_id string, phase string, key string, rows long, seconds string",
-    ).withColumn("updated_ts", F.current_timestamp()).coalesce(1)
+    metrics = _frame(
+        spark, pd.DataFrame(phase_rows, columns=["run_id", "phase", "key", "rows", "seconds"]),
+        "run_id string, phase string, key string, rows long, seconds string",
+    ).withColumn("updated_ts", F.current_timestamp())
     catalog.append(metrics, METRICS_TABLE)
 
     return PipelineResult(
         run_id=run_id,
-        buckets_processed=num_buckets - n_done,
-        buckets_skipped=n_done,
+        buckets_processed=len(owned),
+        buckets_skipped=num_buckets - len(owned),
         seconds=secs,
         phase_seconds=phase_secs,
         observed=observed,

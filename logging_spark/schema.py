@@ -75,14 +75,19 @@ PARSED = StructType(
     ]
 )
 
-# Per-partition lineage for resume (analog of Slack.Spec.Records
-# offset accounting, slack_type.go:24-38 + server.go:68-76).
+# Per-bucket lineage for resume (analog of Slack.Spec.Records
+# offset accounting, slack_type.go:24-38 + server.go:68-76): one done
+# row per (bucket, sink_name, role) with that cell's committed counts;
+# n_distinct_conv is the sink's count in the bucket, on each role row.
 CHECKPOINT = StructType(
     [
-        StructField("bucket", IntegerType(), False),
-        StructField("input_snapshot", StringType(), True),
-        StructField("row_count", LongType(), True),
+        StructField("bucket", LongType(), False),
+        StructField("sink_name", StringType(), False),
+        StructField("role", StringType(), True),
+        StructField("n_rows", LongType(), True),
         StructField("parse_errors", LongType(), True),
+        StructField("n_distinct_conv", LongType(), True),
+        StructField("input_snapshot", StringType(), True),
         StructField("state", StringType(), True),
         StructField("updated_ts", TimestampType(), True),
     ]

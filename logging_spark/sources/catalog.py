@@ -10,26 +10,30 @@ parquet fallback; treat the Iceberg code as a deployment template to
 be validated when a jar is available (drop it on the classpath and the
 same Catalog calls switch over).
 
-The pipeline only uses five verbs, all of which exist in both
+The pipeline only uses six verbs, all of which exist in both
 backends with the same semantics:
 
 - read(table)
 - append(df, table)
-- overwrite_partitions(df, table, partition_cols)  # idempotent resume
+- clear_partitions(table, column, values)  # empty a run's owned buckets
+- overwrite_partitions(df, table, partition_cols)  # write them back
 - replace(df, table)  # whole-table publish, old copy live until swap
 - table_exists(table)  # the topic-exists probe analog
   (reference pkg/utils/kafka.go:9-28)
 
 On Iceberg, overwrite_partitions maps to
 ``df.writeTo(t).overwritePartitions()`` (snapshot-isolated, atomic);
-on Parquet it maps to dynamic partition overwrite, which this module
-configures per-write. Sink tables are created on first write — the
-analog of auto topic creation (kafka.go:30-56).
+on Parquet it maps to dynamic partition overwrite, which session.py
+configures. Either replaces only the cells present in df, so a cell
+whose new output is empty would keep its old rows: the job clears
+every cell of the buckets it owns first. Sink tables are created on
+first write — the analog of auto topic creation (kafka.go:30-56).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,10 +109,8 @@ class Catalog:
         files BEFORE the write). Residual non-atomicity: between the
         two renames the table path is briefly absent. The previous
         copy must really be gone afterwards — a swallowed rmtree
-        failure would keep erased rows on disk and block the next
+        failure would keep stale rows on disk and block the next
         swap's rename — so that is verified, not assumed."""
-        import shutil
-
         path = self._path(table)
         tmp = f"{path}.tmp-{os.getpid()}"
         old = f"{path}.old"
@@ -130,8 +132,10 @@ class Catalog:
         if self.iceberg:
             return self.spark.catalog.tableExists(self._ident(table))
         p = self._path(table)
+        # a partitioned table's root may hold only `name=value` dirs
+        # (a dynamic overwrite leaves no root _SUCCESS)
         return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f.startswith(("part-", "_SUCCESS", "bucket="))
+            f.endswith(".parquet") or f.startswith(("part-", "_SUCCESS")) or "=" in f
             for f in os.listdir(p)
         )
 
@@ -178,6 +182,24 @@ class Catalog:
         (df.write.mode("overwrite").partitionBy(*partition_cols)
          .parquet(self._path(table)))
 
+    def clear_partitions(self, table: str, column: str, values: list[int]) -> None:
+        """Delete every partition `column=v`, v in values, at whatever
+        level of the table's partitioning it sits (for sinks.routed:
+        every `sink_name=*/bucket=v` cell). A missing table is a no-op.
+        On Iceberg this is one ``DELETE FROM t WHERE column IN (...)``
+        (integer values only)."""
+        if self.iceberg:
+            if values and self.table_exists(table):
+                self.spark.sql(f"DELETE FROM {self._ident(table)} WHERE {column} "
+                               f"IN ({', '.join(str(int(v)) for v in values)})")
+            return
+        wanted = {f"{column}={v}" for v in values}
+        for dirpath, dirnames, _ in os.walk(self._path(table)):
+            for d in [d for d in dirnames if d.startswith(f"{column}=")]:
+                dirnames.remove(d)  # never descend below the column's level
+                if d in wanted:
+                    shutil.rmtree(os.path.join(dirpath, d))
+
     def replace(self, df: DataFrame, table: str) -> None:
         """Replace the whole table with df, creating it if absent.
         Readers see the previous rows until df is fully written: a
@@ -218,92 +240,9 @@ class Catalog:
         merged = merge_frames(self.read(table), df, keys, order_col)
         self._swap(table, merged.write.mode("overwrite").parquet)
 
-    def compact(self, table: str, target_file_bytes: int = 128 << 20,
-                partition_cols: list[str] | None = None) -> int:
-        """Rewrite `table` into ~target-sized files and return the new
-        file count. THE streaming-sink maintenance verb: every
-        availableNow drain / micro-batch appends a few small files, and
-        a month of that turns scans into open-file storms (and, on
-        object stores, LIST storms). Sizing uses the table's actual
-        on-disk bytes (no sampling); with `partition_cols` the rewrite
-        repartitions on them so each hive partition lands contiguous
-        files. Crash-safe through _swap: old data live until the new
-        copy is complete. On Iceberg, prefer the engine's own
-        rewrite_data_files action; this verb is the parquet-fallback
-        equivalent."""
-        path = self._path(table)
-        files = [os.path.join(dp, f) for dp, _, fs in os.walk(path)
-                 for f in fs if f.endswith(".parquet")]
-        total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, -(-total // target_file_bytes))
-        df = self.read(table)
-        if partition_cols:
-            out = df.repartition(int(n_out), *partition_cols)
-        else:
-            out = df.repartition(int(n_out))
-        w = out.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        self._swap(table, w.parquet)
-        return len([os.path.join(dp, f) for dp, _, fs in os.walk(path)
-                    for f in fs if f.endswith(".parquet")])
-
-    def erase_rows(self, table: str, predicate: str) -> int:
-        """Targeted erasure (right-to-be-forgotten / S6 Delete at row
-        granularity): rewrite `table` WITHOUT the rows matching
-        `predicate` (a SQL boolean over the table's columns) and
-        return how many were erased. Crash-safe through _swap: the
-        survivors are fully written before the original is swapped
-        out, and the pre-erasure copy is verified gone. On Iceberg
-        this is a single `DELETE FROM ... WHERE` (position/equality
-        deletes); the parquet fallback pays one full rewrite — at
-        100 TB, partition the table on the erasure key (e.g. user
-        bucket) so the rewrite touches only matching partitions via
-        overwrite_partitions instead.
-
-        Counts come from one pass (conditional agg), survivors from a
-        second — two scans total, no collect of data rows."""
-        if self.iceberg:
-            df = self.read(table)
-            n = df.where(predicate).count()
-            self.spark.sql(
-                f"DELETE FROM {self._ident(table)} WHERE {predicate}")
-            return n
-        df = self.read(table)
-        n = df.where(predicate).count()
-        if n == 0:
-            return 0
-        survivors = df.where(f"NOT ({predicate})")
-        self._swap(table, survivors.write.mode("overwrite").parquet)
-        return n
-
     def drop(self, table: str) -> None:
         if self.iceberg:
             self.spark.sql(f"DROP TABLE IF EXISTS {self._ident(table)}")
             return
-        import shutil
         shutil.rmtree(self._path(table), ignore_errors=True)
 
-
-def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   n_buckets: int = 32,
-                   sort_cols: list[str] | None = None) -> None:
-    """Persist `df` as a BUCKETED managed table: files are
-    hash-clustered by `bucket_cols` into `n_buckets` buckets (and
-    optionally sorted within each), so any join or aggregation keyed on
-    those columns reads co-located data and plans WITHOUT a shuffle on
-    either bucketed side — the prepaid-exchange strategy for the
-    tables a 100 TB pipeline joins repeatedly (fact↔fact on conv_id).
-    Plan-proofed in tests/test_bucketed.py: a self-join of two bucketed
-    tables on the bucket key has zero Exchange nodes.
-
-    Spark-native bucketing requires saveAsTable (the bucket spec lives
-    in the session catalog/metastore; spark.read.parquet on the bare
-    path would not know it). Iceberg's equivalent is a
-    `bucket(n, col)` partition transform on writeTo — same co-location,
-    engine-tracked metadata (sources/catalog.py Iceberg branch)."""
-    w = df.write.mode("overwrite").format("parquet") \
-        .bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)

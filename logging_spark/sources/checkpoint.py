@@ -1,32 +1,42 @@
-"""Per-partition checkpoint + resume (SURVEY T2/T3, J3).
+"""Per-bucket checkpoint + resume (SURVEY T2/T3, J3).
 
 Reference behavior: agents resume tailing from the recorded byte
 offset per (service, pod) (pkg/api/server.go:68-76,
-pkg/apis/yamecloud/v1/slack_type.go:28-31); reconcile loops retry
-and skip completed work.
+pkg/apis/yamecloud/v1/slack_type.go:28-31) and count records per pod;
+reconcile loops retry and skip completed work.
 
 Batch formalization: the input is bucketed by pmod(xxhash64(conv_id), B).
-A completed bucket writes one lineage row (bucket, input_snapshot,
-row_count, parse_errors, state, ts). On re-run, completed buckets of
-the SAME input snapshot are anti-joined away; each bucket's sink
-output is written with overwrite-by-partition, so a bucket that
-crashed mid-write is simply rewritten — idempotence without
-read-side dedup.
+A completed bucket writes its stats as its 'done' rows, one per
+(bucket, sink_name, role): n_rows, parse_errors, and the sink's
+distinct-conversation count in that bucket (carried on each role row).
+A run collects its snapshot's done rows once on the driver (at most
+B x sinks x roles rows); the buckets without one are the run's OWNED
+buckets, and that set alone drives the input filter, the sink-cell
+clear, the stats read-back and the done rows appended at the end.
+An owned bucket has no done row until that final append, so a crash
+anywhere before it leaves the bucket owned and the next run clears
+and rewrites it — idempotence without read-side dedup.
 
 Scale: B should be sized so one bucket's turns fit a worker wave
 (e.g. B=4096 at 10^12 turns -> ~250M turns/bucket). Bucket id is a
 pure function of conv_id, so all turns of a conversation live in one
-bucket and per-conv semantics (dedup, ordering) never cross buckets.
+bucket: per-conv semantics (dedup, ordering) never cross buckets, and
+distinct-conversation counts add up exactly across buckets.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from logging_spark.schema import CHECKPOINT
 from logging_spark.sources.catalog import Catalog
 
 CHECKPOINT_TABLE = "meta.checkpoint"
+# bucket, sink_name, role, n_rows, parse_errors, n_distinct_conv
+STATS_COLS = CHECKPOINT.fieldNames()[:6]
 
 
 def with_bucket(df: DataFrame, num_buckets: int, key: str = "conv_id") -> DataFrame:
@@ -35,42 +45,40 @@ def with_bucket(df: DataFrame, num_buckets: int, key: str = "conv_id") -> DataFr
     )
 
 
-def completed_buckets(catalog: Catalog, input_snapshot: str) -> DataFrame | None:
+def done_rows(catalog: Catalog, input_snapshot: str) -> pd.DataFrame:
+    """The snapshot's done rows (STATS_COLS), collected on the driver."""
     if not catalog.table_exists(CHECKPOINT_TABLE):
-        return None
-    cp = catalog.read(CHECKPOINT_TABLE)
-    return (
-        cp.where((F.col("input_snapshot") == input_snapshot) & (F.col("state") == "done"))
-        .select("bucket").distinct()
-    )
+        return pd.DataFrame(columns=STATS_COLS)
+    return (catalog.read(CHECKPOINT_TABLE)
+            .where((F.col("input_snapshot") == input_snapshot)
+                   & (F.col("state") == "done"))
+            .select(*STATS_COLS).toPandas())
+
+
+def owned(done: pd.DataFrame, num_buckets: int) -> list[int]:
+    """Buckets in range(num_buckets) with no done row."""
+    return sorted(set(range(num_buckets)) - set(done["bucket"].astype(int)))
 
 
 def pending(df_bucketed: DataFrame, catalog: Catalog, input_snapshot: str) -> DataFrame:
-    """Anti-join completed buckets away. The completed-bucket set is
-    tiny (<= B rows) -> broadcast anti-join, no shuffle of the fact."""
-    done = completed_buckets(catalog, input_snapshot)
-    if done is None:
-        return df_bucketed
-    return df_bucketed.join(F.broadcast(done), on="bucket", how="left_anti")
+    """Rows of buckets with no done row under input_snapshot: a literal
+    IN-list filter, no join and no broadcast of the checkpoint."""
+    done = sorted(set(done_rows(catalog, input_snapshot)["bucket"].astype(int)))
+    return df_bucketed.where(~F.col("bucket").isin(done)) if done else df_bucketed
 
 
-def record_done(
-    catalog: Catalog,
-    buckets_stats: DataFrame,
-    input_snapshot: str,
-) -> None:
-    """buckets_stats: (bucket, row_count, parse_errors). Appends 'done'
-    lineage rows stamped with the driver clock."""
-    rows = (
-        buckets_stats.withColumn("input_snapshot", F.lit(input_snapshot))
-        .withColumn("state", F.lit("done"))
+def record_done(catalog: Catalog, stats: pd.DataFrame, input_snapshot: str) -> None:
+    """stats: pandas rows of STATS_COLS. Appends them as 'done' rows
+    stamped with the driver clock. Arrow createDataFrame with the
+    pinned schema: no Python workers, and `bucket` is bigint like an
+    inferred Python int, so rows re-appended from a collect never mix
+    INT32 and INT64 files (a mix fails the next read). No rows, no
+    append."""
+    if stats.empty:
+        return
+    schema = StructType(CHECKPOINT.fields[:-1])  # all but updated_ts
+    rows = stats.assign(input_snapshot=input_snapshot, state="done")
+    df = catalog.spark.createDataFrame(rows[schema.fieldNames()], schema=schema) \
         .withColumn("updated_ts", F.current_timestamp())
-        .select("bucket", "input_snapshot", "row_count", "parse_errors",
-                "state", "updated_ts")
-    )
-    # <= num_buckets rows: one file per append, not shuffle_partitions
-    catalog.append(rows.coalesce(1), CHECKPOINT_TABLE)
-
-
-def clear(catalog: Catalog) -> None:
-    catalog.drop(CHECKPOINT_TABLE)
+    # <= B x sinks x roles rows: one file per append
+    catalog.append(df.coalesce(1), CHECKPOINT_TABLE)

@@ -176,79 +176,3 @@ def media(spark: SparkSession, n: int = 200) -> DataFrame:
         F.when(kind == "image", (F.pmod(_mix(F.col("id"), 33), F.lit(512)) + 32).cast("int")).alias("height"),
         F.when(kind != "image", F.pmod(_mix(F.col("id"), 34), F.lit(600_000))).alias("duration_ms"),
     )
-
-
-_DOC_VOCAB = [
-    "spark", "sql", "batch", "stream", "shuffle", "join", "agg",
-    "filter", "sort", "hash", "scan", "merge", "window", "row",
-    "column", "table", "query", "part", "key", "value", "data",
-    "fast", "slow", "small", "big", "group", "order", "line", "a",
-    "the",
-]
-
-
-def documents(spark: SparkSession, n_docs: int = 5000,
-              dup_pct: int = 4, neardup_pct: int = 6,
-              partitions: int | None = None) -> DataFrame:
-    """documents-shaped corpus (doc_id, text, lang, source, n_chars)
-    with planted exact duplicates and near-duplicates, a pure
-    deterministic function of doc_id at ANY size — the fixture for
-    dedup-family scale probes beyond the driver testdata's sf0.1.
-
-    ``dup_pct`` of docs copy the previous doc's token stream verbatim
-    (exact dup); ``neardup_pct`` copy it with the first token replaced
-    (high-Jaccard near dup). Everything is JVM-side expression code:
-    token arrays come from a transform() over a BOUND src column (the
-    interpreted-HOF rule — an unbound expression in the lambda would
-    re-evaluate per element), so generation scales linearly with no
-    Python in the loop.
-    """
-    v = len(_DOC_VOCAB)
-    vocab = F.array(*[F.lit(w) for w in _DOC_VOCAB])
-    d = spark.range(n_docs, numPartitions=partitions) \
-        .select(F.col("id").alias("doc_id"))
-    r = F.pmod(_mix(F.col("doc_id"), 101), F.lit(100))
-    is_copy = (r < F.lit(dup_pct + neardup_pct)) & (F.col("doc_id") > 0)
-    d = d.select(
-        "doc_id",
-        r.alias("r"),
-        F.when(is_copy, F.col("doc_id") - 1).otherwise(F.col("doc_id"))
-        .alias("src"))
-    # Zipf-ish lexicon: ~70% of tokens from the 30-word head, ~30%
-    # from a 50k-token hashed long tail — without the tail, unrelated
-    # docs collide in LSH bands by chance and candidate growth reads
-    # superlinear for reasons that have nothing to do with the caps
-    # under test
-    d = d.select(
-        "doc_id", "r",
-        F.transform(
-            F.sequence(F.lit(1),
-                       (F.pmod(_mix(F.col("src"), 7), F.lit(40)) + 30)
-                       .cast("int")),
-            lambda i: F.when(
-                F.pmod(F.xxhash64(F.col("src"), i, F.lit(SEED + 1)),
-                       F.lit(10)) < 7,
-                F.element_at(
-                    vocab,
-                    (F.pmod(F.xxhash64(F.col("src"), i, F.lit(SEED)),
-                            F.lit(v)) + 1).cast("int"))
-            ).otherwise(
-                F.concat(F.lit("w"), F.pmod(
-                    F.xxhash64(F.col("src"), i, F.lit(SEED + 2)),
-                    F.lit(50_000)).cast("string")))).alias("toks"))
-    near = (F.col("r") >= F.lit(dup_pct)) & \
-           (F.col("r") < F.lit(dup_pct + neardup_pct)) & \
-           (F.col("doc_id") > 0)
-    toks = F.when(
-        near,
-        F.concat(F.array(F.lit("variant")),
-                 F.slice(F.col("toks"), 2, 10_000))
-    ).otherwise(F.col("toks"))
-    text = F.array_join(toks, " ")
-    return d.select(
-        "doc_id",
-        text.alias("text"),
-        _pick(F.col("doc_id"), 11, ["en", "de", "fr", "zh"]).alias("lang"),
-        _pick(F.col("doc_id"), 12,
-              [f"src{i}" for i in range(5)]).alias("source"),
-        F.length(text).cast("long").alias("n_chars"))

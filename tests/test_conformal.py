@@ -87,3 +87,30 @@ def test_ess_audit_brute_force(spark):
     s2 = 1_000_000**2 + 99
     assert x["ess_x100"] == (s1 * s1 * 100) // s2
     assert x["ess_x100"] < 200  # effectively one document
+
+
+def test_dq_conformal_coverage_small_source_matches_oracle(spark, tmp_path):
+    """A source with fewer than 9 calibration rows (k > n_cal at alpha
+    = 0.1) keeps its row with NULL q_hat and NULL coverage in both the
+    contract query and its DuckDB oracle."""
+    import duckdb
+    import pandas as pd
+
+    from logging_spark import contract
+
+    docs = pd.DataFrame(
+        [(i, "t", "en", "big", 10 + (i * 37) % 50) for i in range(40)]
+        + [(100 + i, "t", "en", "tiny", 5 + i) for i in range(10)],
+        columns=["doc_id", "text", "lang", "source", "n_chars"])
+    docs.to_parquet(tmp_path / "documents.parquet")
+    cols = ["source", "n_cal", "k", "q_hat", "n_test", "coverage_ppm", "target_ppm"]
+    got = {r["source"]: tuple(r[c] for c in cols) for r in
+           contract.build_queries()["dq_conformal_coverage"](spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    want = {r[0]: r for r in con.execute(
+        f"SELECT {', '.join(cols)} FROM ({contract.build_oracles()['dq_conformal_coverage']})"
+    ).fetchall()}
+    con.close()
+    assert got == want
+    assert got["tiny"][:4] == ("tiny", 5, 6, None) and got["tiny"][5] is None

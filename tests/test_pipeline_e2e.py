@@ -92,35 +92,53 @@ def _shuffles_and_broadcasts(node) -> tuple[int, int]:
     return shuffles, broadcasts
 
 
-def test_single_write_path_plan(spark, fixtures, tmp_path):
-    """The routed DataFrame handed to the sink write carries exactly
-    one shuffle exchange — the dedup window — while the enrich join
-    and the checkpoint anti-join are broadcasts."""
+class RecordingCatalog(Catalog):
+    written = None
+
+    def overwrite_partitions(self, df, table, partition_cols):
+        self.written = df
+        super().overwrite_partitions(df, table, partition_cols)
+
+
+def _resume_plan(spark, turns, fixtures, wh):
+    """The executed plan of the routed frame a partial resume (bucket 0
+    already done) hands to the sink write."""
     from logging_spark.sources import checkpoint as ckpt
 
-    class RecordingCatalog(Catalog):
-        written = None
+    _, lookup, rules = fixtures
+    cat = RecordingCatalog(spark, wh)
+    ckpt.record_done(cat, pd.DataFrame([{
+        "bucket": 0, "sink_name": "errors", "role": "assistant", "n_rows": 1,
+        "parse_errors": 0, "n_distinct_conv": 1}]), "plan-1")
+    res = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                       input_snapshot="plan-1")
+    assert res.buckets_skipped == 1
+    return cat.written._jdf.queryExecution().executedPlan()
 
-        def overwrite_partitions(self, df, table, partition_cols):
-            self.written = df
-            super().overwrite_partitions(df, table, partition_cols)
 
-    turns, lookup, rules = fixtures
+def test_single_write_path_plan(spark, fixtures, tmp_path):
+    """The routed DataFrame handed to the sink write carries exactly
+    one shuffle exchange — the dedup window — and one broadcast, the
+    enrich join: skipping done buckets is a literal filter."""
+    turns, _, _ = fixtures
     # scan committed files as the job does in production: one scan,
     # not the generator's union of branches
     turns.write.parquet(str(tmp_path / "turns"))
     turns = spark.read.parquet(str(tmp_path / "turns"))
-    cat = RecordingCatalog(spark, str(tmp_path / "wh"))
-    # bucket 0 already committed: the resume anti-join is in the plan
-    ckpt.record_done(cat, spark.createDataFrame(
-        [(0, 1, 0)], "bucket int, row_count long, parse_errors long"), "plan-1")
-    res = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
-                       input_snapshot="plan-1")
-    assert res.buckets_skipped == 1
-    plan = cat.written._jdf.queryExecution().executedPlan()
+    plan = _resume_plan(spark, turns, fixtures, str(tmp_path / "wh"))
     text = plan.toString()
-    assert _shuffles_and_broadcasts(plan) == (1, 2), text
+    assert _shuffles_and_broadcasts(plan) == (1, 1), text
     assert "Exchange hashpartitioning(conv_id" in text, text
+
+
+def test_generated_input_resume_plan_has_no_checkpoint_joins(spark, fixtures, tmp_path):
+    """On the generator's union of branches the done-bucket filter is
+    pushed into every branch; as a literal IN-list it adds no
+    broadcast and no anti-join there (an anti-join against the
+    checkpoint table planned one of each per branch)."""
+    turns, _, _ = fixtures
+    text = _resume_plan(spark, turns, fixtures, str(tmp_path / "wh")).toString()
+    assert (text.count("BroadcastExchange"), text.count("LeftAnti")) == (1, 0), text
 
 
 def test_enrich_defaults_on_miss(spark, fixtures):

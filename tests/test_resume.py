@@ -1,11 +1,14 @@
 """Resume/idempotence (SURVEY §5.4): run, damage the checkpoint, re-run
 -> identical final outputs; completed buckets are skipped."""
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
 from logging_spark import synth
-from logging_spark.plans.job import ROUTED_TABLE, run_pipeline
+from logging_spark.plans.job import ROUTED_TABLE, read_sink, run_pipeline
+from logging_spark.sources import checkpoint as ckpt
 from logging_spark.sources.catalog import Catalog
 from logging_spark.sources.checkpoint import CHECKPOINT_TABLE
 
@@ -73,9 +76,9 @@ def test_new_snapshot_reprocesses(spark, fixtures, tmp_path_factory):
 
 def test_crashed_bucket_partial_write_is_overwritten(spark, fixtures, tmp_path_factory):
     """A bucket that crashed mid-write leaves stale rows in its sink
-    partitions but no checkpoint row. The re-run's dynamic partition
-    overwrite must replace those partitions wholesale — no garbage
-    survives, counts exact."""
+    partitions but no checkpoint row. The re-run owns it and clears
+    its cells before writing them back — no garbage survives, counts
+    exact."""
     import os
     turns, lookup, rules = fixtures
     wh = str(tmp_path_factory.mktemp("wh"))
@@ -108,6 +111,94 @@ def test_crashed_bucket_partial_write_is_overwritten(spark, fixtures, tmp_path_f
     assert _snapshot(cat) == want
 
 
+def _fresh(spark, turns, lookup, rules, tmp_path_factory):
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("fresh")))
+    run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                 input_snapshot="fresh")
+    return _snapshot(cat)
+
+
+def test_shrunk_input_new_snapshot_equals_fresh_run(spark, fixtures, tmp_path_factory):
+    """Bucket 3's conversations vanish from the input under a new
+    snapshot: the re-run owns bucket 3 again, so its old cells go even
+    though the new run writes nothing there."""
+    turns, lookup, rules = fixtures
+    shrunk = ckpt.with_bucket(turns, 8).where("bucket != 3").drop("bucket")
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
+    run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                 input_snapshot="snap-F")
+    run_pipeline(spark, shrunk, lookup, rules, cat, num_buckets=8,
+                 input_snapshot="snap-G")
+    assert _snapshot(cat) == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
+
+
+def test_disabled_rule_new_snapshot_empties_its_sink(spark, fixtures, tmp_path_factory):
+    turns, lookup, rules = fixtures
+    off = rules.withColumn("enabled", F.col("enabled") & (F.col("sink_name") != "errors"))
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
+    run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                 input_snapshot="snap-H")
+    assert read_sink(cat, "errors").count() > 0
+    res = run_pipeline(spark, turns, lookup, off, cat, num_buckets=8,
+                       input_snapshot="snap-I")
+    assert read_sink(cat, "errors").count() == 0
+    assert "errors" not in {r["sink_name"] for r in res.per_sink_counts.collect()}
+    assert _snapshot(cat) == _fresh(spark, turns, lookup, off, tmp_path_factory)
+
+
+def test_crash_between_clear_and_write_ends_exact(spark, fixtures, tmp_path_factory):
+    """The sink write fails after the owned cells were cleared: no done
+    row was appended, so the re-run owns the same buckets again."""
+    class CrashOnce(Catalog):
+        crashed = False
+
+        def overwrite_partitions(self, df, table, partition_cols):
+            if not self.crashed:
+                self.crashed = True
+                raise RuntimeError("lost the sink write")
+            super().overwrite_partitions(df, table, partition_cols)
+
+    turns, lookup, rules = fixtures
+    shrunk = ckpt.with_bucket(turns, 8).where("bucket != 3").drop("bucket")
+    wh = str(tmp_path_factory.mktemp("wh"))
+    run_pipeline(spark, turns, lookup, rules, Catalog(spark, wh), num_buckets=8,
+                 input_snapshot="snap-J")
+    cat = CrashOnce(spark, wh)
+    with pytest.raises(RuntimeError, match="lost the sink write"):
+        run_pipeline(spark, shrunk, lookup, rules, cat, num_buckets=8,
+                     input_snapshot="snap-K")
+    assert not glob.glob(f"{wh}/sinks/routed/*/bucket=*")  # all cells cleared
+    res = run_pipeline(spark, shrunk, lookup, rules, cat, num_buckets=8,
+                       input_snapshot="snap-K")
+    assert res.buckets_skipped == 0
+    assert _snapshot(cat) == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
+
+
+def test_empty_input_empty_warehouse(spark, fixtures, tmp_path_factory):
+    """Empty input finishes: no bucket is done and the aggregate tables
+    exist, empty, with their usual schema."""
+    turns, lookup, rules = fixtures
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
+    res = run_pipeline(spark, turns.limit(0), lookup, rules, cat, num_buckets=4,
+                       input_snapshot="snap-L")
+    assert (res.buckets_processed, res.buckets_skipped) == (4, 0)
+    assert ckpt.done_rows(cat, "snap-L").empty
+    assert res.per_sink_counts.count() == 0 and res.role_rollup.count() == 0
+    assert res.per_sink_counts.columns == ["sink_name", "n_rows", "n_distinct_conv"]
+    assert res.role_rollup.columns == ["sink_name", "role", "n_turns"]
+
+
+def test_table_exists_sees_partitioned_sink(spark, fixtures, tmp_path_factory):
+    """A dynamic overwrite leaves only `sink_name=...` dirs at the sink
+    table's root, and that is a table."""
+    turns, lookup, rules = fixtures
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
+    assert not cat.table_exists(ROUTED_TABLE)
+    run_pipeline(spark, turns, lookup, rules, cat, num_buckets=4,
+                 input_snapshot="snap-M")
+    assert cat.table_exists(ROUTED_TABLE)
+
+
 def test_merge_upsert_field_wise(spark, tmp_path_factory):
     """S5 Apply with reference merge semantics (datasource.go:206-276):
     a NULL field in an update row preserves the existing value; new
@@ -138,50 +229,6 @@ def test_merge_upsert_latest_wins_order_col(spark, tmp_path_factory):
     cat.merge_upsert(upd, "cfg.vals", keys=["k"], order_col="ts")
     rows = cat.read("cfg.vals").collect()
     assert len(rows) == 1 and rows[0]["v"] == "new" and rows[0]["ts"] == 9
-
-
-def test_compact_small_files(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from logging_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    df = spark.range(20_000).select(
-        F.col("id"), (F.col("id") % 5).cast("string").alias("sink"),
-        F.md5(F.col("id").cast("string")).alias("text"))
-    # simulate a micro-batch-riddled sink: 40 tiny appends
-    for i in range(40):
-        cat.append(df.where(F.col("id") % 40 == i).coalesce(1), "sink_tbl")
-    import os
-    path = cat._path("sink_tbl")
-    before = sum(f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs)
-    assert before >= 40
-    pre = sorted(r["id"] for r in cat.read("sink_tbl").collect())
-
-    n_after = cat.compact("sink_tbl", target_file_bytes=10 << 20)
-    assert n_after < before / 10
-    # byte-for-byte the same table
-    post = sorted(r["id"] for r in cat.read("sink_tbl").collect())
-    assert post == pre
-    # no debris from the swap
-    assert not os.path.exists(path + ".old")
-
-
-def test_erase_rows_right_to_be_forgotten(spark, tmp_path):
-    from logging_spark.sources.catalog import Catalog
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame(
-        [(u, i, f"text-{u}-{i}") for u in ("alice", "bob", "carol")
-         for i in range(10)],
-        "user string, seq int, text string")
-    cat.append(df, "sink.events")
-    n = cat.erase_rows("sink.events", "user = 'bob'")
-    assert n == 10
-    back = cat.read("sink.events")
-    assert back.count() == 20
-    assert back.where("user = 'bob'").count() == 0
-    # NULL-safe: predicate false/NULL rows survive; repeat is a no-op
-    assert cat.erase_rows("sink.events", "user = 'bob'") == 0
-    assert cat.read("sink.events").count() == 20
 
 
 def test_replace_failed_write_keeps_previous_table(spark, tmp_path):
