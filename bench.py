@@ -279,38 +279,13 @@ def run_scaling(pair: tuple[int, int], n_conversations: int = 80000,
     ceilings = []
     import statistics
 
-    def _one_window(r: int) -> None:
+    # a fixed number of windows, each reported: a window count that
+    # depended on the outcome would make two artifacts incomparable
+    for r in range(repeats):
         ceilings.append(_cpu_calibration(pair))
         for cpus in (lo, hi):
             samples[cpus].append(_submit_once(here, cpus, f"r{r}", input_dir))
 
-    for r in range(repeats):
-        _one_window(r)
-
-    # lo-leg sanity gate (round-3 VERDICT item 2): a paired window is
-    # NOMINAL only if its lo leg sits within 15% of the battery's lo
-    # median — a window whose lo leg is itself an outlier produces a
-    # ratio that measures ambient noise, not the plan. If no nominal
-    # window clears >=0.8 absolute, keep sampling (bounded) until one
-    # does or the budget is spent; every window is still reported.
-    def _nominal_flags() -> list[bool]:
-        lo_med = statistics.median(s["seconds"] for s in samples[lo])
-        return [abs(s["seconds"] - lo_med) / lo_med <= 0.15
-                for s in samples[lo]]
-
-    def _window_effs() -> list[float]:
-        return [(samples[hi][i]["turns_per_sec"]
-                 / samples[lo][i]["turns_per_sec"]) / 4.0
-                for i in range(len(samples[lo]))]
-
-    max_extra = int(os.environ.get("SPARK_GRAFT_SCALING_MAX_EXTRA", "6"))
-    extra = 0
-    while extra < max_extra:
-        flags, effs = _nominal_flags(), _window_effs()
-        if any(f and e >= 0.8 for f, e in zip(flags, effs)):
-            break
-        _one_window(repeats + extra)
-        extra += 1
     runs = {}
     for cpus, ss in samples.items():
         best = min(ss, key=lambda s: s["seconds"])
@@ -333,23 +308,17 @@ def run_scaling(pair: tuple[int, int], n_conversations: int = 80000,
     # with its own in-window raw-CPU ceiling so relative efficiency
     # (spark_ratio / hw_ceiling) is a same-window comparison.
     paired = []
-    flags = _nominal_flags()
-    for i in range(len(samples[lo])):
-        e = (samples[hi][i]["turns_per_sec"]
-             / samples[lo][i]["turns_per_sec"]) / 4.0
-        c = ceilings[i]["raw_cpu_efficiency"] if i < len(ceilings) else None
+    for s_lo, s_hi, ceiling in zip(samples[lo], samples[hi], ceilings):
+        e = (s_hi["turns_per_sec"] / s_lo["turns_per_sec"]) / 4.0
+        c = ceiling["raw_cpu_efficiency"]
         paired.append({"efficiency": round(e, 3), "hw_ceiling": c,
-                       "relative": round(e / c, 3) if c else None,
-                       "lo_nominal": flags[i]})
-    nominal = [p["efficiency"] for p in paired if p["lo_nominal"]]
+                       "relative": round(e / c, 3) if c else None})
     return {
         "metric": f"scaling efficiency e2e pipeline local[{lo}]->local[{hi}] (N vs 4N)",
         "value": round(eff_best, 3), "unit": "ratio",
         "value_median": round(eff_med, 3),
         "paired_per_window": paired,
         "value_best_paired": max(p["efficiency"] for p in paired),
-        "value_best_paired_nominal": max(nominal) if nominal else None,
-        "extra_windows_sampled": extra,
         "runs": {f"local{c}": runs[c] for c in (lo, hi)},
         "hw_ceiling_per_window": ceilings,
         "hw_ceiling_best": max(c["raw_cpu_efficiency"] for c in ceilings),

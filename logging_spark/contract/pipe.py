@@ -6,9 +6,10 @@ from logging_spark.contract._fixtures import (
     DUPS_CTE, F, LOOKUP_CTE, ROUTED_CTE, RULES, Rule, T, TURNS_CTE, Window,
     _read, assemble_conversations, assemble_multiline, context_examples,
     dedup_latest_wins, enrich, enriched_df, jp, lookup_df, merge_consecutive,
-    merge_frames, parse_turns, parsed_df, per_sink_counts,
+    merge_frames, parsed_df, per_sink_counts,
     per_sink_role_rollup, resume_points, routed_df, sessionize, spike_flags,
     turns_df, turns_with_dups)
+from logging_spark.functions.parse import parsed_udf
 
 
 def register(q):
@@ -30,7 +31,8 @@ def register(q):
     # Arrow-batched pandas-UDF twin of the parser (north_star's
     # mandated path), value-checked against the same oracle
     def pipe_parse_grok_udf(spark, sf):
-        t = parse_turns(turns_df(spark, sf), use_udf=True)
+        t = turns_df(spark, sf)
+        t = t.withColumn("parsed", parsed_udf(t["text"]))
         return t.select(
             "conv_id", "turn_idx",
             F.col("parsed.level").alias("level"),

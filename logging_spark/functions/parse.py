@@ -7,13 +7,13 @@ fields `[LEVEL] component: message key=val ...` into a struct.
 
 Two implementations, same output schema (schema.PARSED):
 
-- ``parse_turns_builtin``: pure Catalyst expressions
-  (regexp_extract + str_to_map + to_json) — whole-stage codegen,
-  zero Python. Default for the hot path.
+- ``parse_turns`` / ``parse_expr``: pure Catalyst expressions
+  (regexp_extract + map_from_entries + to_json) — whole-stage
+  codegen, zero Python. The job's only parser.
 - ``parsed_udf``: Arrow-batched pandas UDF using pre-compiled regex +
   pandas .str vectorized ops (no per-row Python). Kept as the
-  extension point for grok patterns Catalyst regex can't express,
-  and as a cross-check of the builtin path in tests.
+  ``pipe_parse_grok_udf`` contract twin and as a cross-check of the
+  builtin path in tests; nothing on the job path calls it.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ _COMP_X = r"^\[[A-Z]+\]\s+([\w.-]+):"
 _MSG_X = r"^\[[A-Z]+\]\s+[\w.-]+:\s+(\S+)"
 
 
-def parse_turns(df: DataFrame, text_col: str = "text", use_udf: bool = False) -> DataFrame:
+def parse_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append a `parsed` struct column (level, component, message, attrs).
 
     When the session runs with spark.sql.mapKeyDedupPolicy=LAST_WIN
@@ -50,8 +50,6 @@ def parse_turns(df: DataFrame, text_col: str = "text", use_udf: bool = False) ->
     higher-order functions — let-bound it adds ~0.7x on a kv-heavy 2M
     rows, down from ~2x when the probes re-built the pair array; the
     LAST_WIN path stays the production default: zero extra work)."""
-    if use_udf:
-        return df.withColumn("parsed", parsed_udf(F.col(text_col)))
     policy = df.sparkSession.conf.get("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
     return df.withColumn(
         "parsed", parse_expr(F.col(text_col), last_win=policy.upper() == "LAST_WIN"))

@@ -1,4 +1,4 @@
-from logging_spark.operators.rules import Rule, compile_rules, load_rules  # noqa: F401
+from logging_spark.operators.rules import Rule, load_rules  # noqa: F401
 from logging_spark.operators.enrich import enrich  # noqa: F401
 from logging_spark.operators.dedup import dedup_latest_wins  # noqa: F401
 from logging_spark.operators.route import route  # noqa: F401

@@ -72,6 +72,3 @@ def load_rules(rules_df: DataFrame) -> list[Rule]:
         )
     return out
 
-
-def compile_rules(rules: list[Rule]) -> list[tuple[Rule, Column]]:
-    return [(r, r.predicate()) for r in rules]

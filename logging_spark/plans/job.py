@@ -21,7 +21,7 @@ shuffles is one whole-stage-codegen span.
 
 Sinks: ONE table partitioned by (sink_name, bucket) rather than k
 physical tables. Writing k tables from one routed DF needs k actions
-(k recomputes or a 100 TB persist); dynamic-partition write is a
+(k recomputes or a 100 TB persist); one partitioned append is a
 single pass, and a "sink table" is a partition subtree readers prune
 to — the moral equivalent of the reference's topic-per-service
 (server.go:131) with auto-creation (kafka.go:30-56).
@@ -90,14 +90,11 @@ def transform(
     lookup_df: DataFrame,
     rules: list[Rule],
     num_buckets: int = 32,
-    deduplicate: bool = True,
 ) -> DataFrame:
     """The pure (side-effect-free) parse->enrich->route plan; returns
     the routed DataFrame with ROUTED_COLS. Usable standalone (tests,
     oracle comparison, streaming foreachBatch)."""
-    df = ckpt.with_bucket(turns, num_buckets)
-    if deduplicate:
-        df = dedup_latest_wins(df)
+    df = dedup_latest_wins(ckpt.with_bucket(turns, num_buckets))
     df = parse_turns(df)
     df = df.select(
         "bucket", "conv_id", "turn_idx", "role", "text", "tool", "ts",
@@ -167,9 +164,10 @@ def run_pipeline(
     routed = routed.observe(obs,
                             F.count(F.lit(1)).alias("rows_routed"),
                             F.sum(F.length("text")).alias("text_chars"))
-    # overwrite_partitions replaces only the cells present in routed:
-    # empty every owned cell first, so a bucket whose new output lost
-    # a sink (shrunk input, disabled rule) keeps no stale rows there
+    # clear, then append: every owned cell is emptied before the
+    # write, so a bucket whose new output lost a sink (shrunk input,
+    # disabled rule) keeps no stale rows there, and a write that
+    # failed part-way leaves only owned cells for the next run to clear
     catalog.clear_partitions(ROUTED_TABLE, "bucket", owned)
     catalog.overwrite_partitions(routed, ROUTED_TABLE, ["sink_name", "bucket"])
     phase_secs["transform_write"] = time.time() - tw

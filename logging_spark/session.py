@@ -2,8 +2,10 @@
 
 Scale notes (100 TB / 1000 executors): every knob here is either
 cluster-size-relative (shuffle partitions ~ 2-3x total cores) or a
-pure enable flag (AQE, skew join, Arrow) that is correct at any
-scale. Nothing below hardcodes a data size.
+pure enable flag (Arrow) that is correct at any scale. Nothing below
+hardcodes a data size. Only values that differ from Spark's defaults
+are set: AQE with skew-join splitting and partition coalescing is on
+by default, as is a 128 MiB scan split.
 """
 
 from __future__ import annotations
@@ -26,9 +28,6 @@ def build_session(
 ) -> SparkSession:
     """Build a session with the pipeline's standard configuration.
 
-    - AQE + skew-join handling on: the router's repartition by
-      hash(conv_id) can still skew on hot conversations; AQE splits
-      oversized post-shuffle partitions at runtime.
     - Arrow on: the grok parser and embedding kernels are pandas UDFs.
     - UTC session timezone: required for oracle (DuckDB) comparison.
     - shuffle partitions default to 2x cores locally; on a real
@@ -77,9 +76,6 @@ def build_session(
     builder = (
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # LAST_WIN = python-dict duplicate-key semantics inside
@@ -89,16 +85,14 @@ def build_session(
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # v2 commit: task outputs move to the destination at task
         # commit (parallel, on executors) instead of one serial
         # driver-side rename pass at job commit — measurably shorter
-        # commit floor for many-partition sink writes. Idempotent
-        # resume is unaffected: bucket overwrite replaces whole
-        # partition dirs, so a torn job is rewritten either way
-        # (tests/test_resume.py crash-mid-write case).
+        # commit floor for many-partition sink writes. A failed job
+        # can leave committed task files in the cells it owned; the
+        # next run clears those cells before it appends (the
+        # tests/test_resume.py crash cases).
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # Local-FS metadata cost: pip-installed PySpark has no native
         # libhadoop, so Hadoop's LocalFileSystem shells out (fork+exec
@@ -107,7 +101,7 @@ def build_session(
         # writes (jstack: Shell.runCommand under task threads).
         # RawLocalFileSystem skips checksum twins and most permission
         # shelling; durability is parquet's own checksums + the
-        # overwrite-by-partition resume story. On a real cluster sinks
+        # clear-and-rewrite resume story. On a real cluster sinks
         # live on HDFS/S3 and this conf is inert.
         .config("spark.hadoop.fs.file.impl",
                 "org.apache.hadoop.fs.RawLocalFileSystem")

@@ -3,7 +3,7 @@ Parquet-directory fallback otherwise.
 
 STATUS OF THE ICEBERG BRANCH: designed-for, NOT exercised — this image
 ships no iceberg-spark-runtime jar and has no network to fetch one, so
-every `self.iceberg` path below (snapshot reads, overwritePartitions,
+every `self.iceberg` path below (snapshot reads, DELETE FROM,
 MERGE INTO) is written against the published Iceberg-Spark API but has
 never run here. The tested, supported backend in this repo is the
 parquet fallback; treat the Iceberg code as a deployment template to
@@ -16,18 +16,20 @@ backends with the same semantics:
 - read(table)
 - append(df, table)
 - clear_partitions(table, column, values)  # empty a run's owned buckets
-- overwrite_partitions(df, table, partition_cols)  # write them back
+- overwrite_partitions(df, table, partition_cols)  # append them back
 - replace(df, table)  # whole-table publish, old copy live until swap
 - table_exists(table)  # the topic-exists probe analog
   (reference pkg/utils/kafka.go:9-28)
 
-On Iceberg, overwrite_partitions maps to
-``df.writeTo(t).overwritePartitions()`` (snapshot-isolated, atomic);
-on Parquet it maps to dynamic partition overwrite, which session.py
-configures. Either replaces only the cells present in df, so a cell
-whose new output is empty would keep its old rows: the job clears
-every cell of the buckets it owns first. Sink tables are created on
-first write — the analog of auto topic creation (kafka.go:30-56).
+A run's sink cells are replaced by one mechanism on both backends:
+clear_partitions empties every cell of the buckets the run owns
+(Iceberg ``DELETE FROM``, Parquet directory removal), then
+overwrite_partitions appends the new rows into them (Iceberg
+``writeTo(t).append()``, Parquet ``mode('append').partitionBy``).
+A cell whose new output is empty therefore keeps no old rows, and no
+session conf changes how other writers overwrite. Sink tables are
+created on first write — the analog of auto topic creation
+(kafka.go:30-56).
 """
 
 from __future__ import annotations
@@ -133,7 +135,7 @@ class Catalog:
             return self.spark.catalog.tableExists(self._ident(table))
         p = self._path(table)
         # a partitioned table's root may hold only `name=value` dirs
-        # (a dynamic overwrite leaves no root _SUCCESS)
+        # (session.py turns the _SUCCESS marker off)
         return os.path.isdir(p) and any(
             f.endswith(".parquet") or f.startswith(("part-", "_SUCCESS")) or "=" in f
             for f in os.listdir(p)
@@ -162,25 +164,11 @@ class Catalog:
 
     def overwrite_partitions(self, df: DataFrame, table: str,
                              partition_cols: list[str]) -> None:
-        """Replace exactly the partitions present in df (idempotent
-        re-run of a resumed bucket never double-writes)."""
-        if self.iceberg:
-            writer = df.writeTo(self._ident(table))
-            if not self.table_exists(table):
-                from pyspark.sql import functions as F
-                writer.partitionedBy(*[F.col(c) for c in partition_cols]).create()
-            else:
-                writer.overwritePartitions()
-            return
-        # dynamic overwrite: session conf is set in session.py; assert
-        # rather than silently clobbering the whole table
-        mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        if mode.lower() != "dynamic":
-            raise RuntimeError(
-                "partitionOverwriteMode must be 'dynamic' for idempotent resume"
-            )
-        (df.write.mode("overwrite").partitionBy(*partition_cols)
-         .parquet(self._path(table)))
+        """Fill the cells the caller has just emptied with
+        clear_partitions: a plain partitioned append, which creates the
+        table on first write. Clear + append is the sink's one
+        replacement mechanism and needs no session conf."""
+        self.append(df, table, partition_cols)
 
     def clear_partitions(self, table: str, column: str, values: list[int]) -> None:
         """Delete every partition `column=v`, v in values, at whatever

@@ -30,10 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logging_spark import schema as S
-from logging_spark.functions.parse import parse_turns
-from logging_spark.operators.enrich import enrich
-from logging_spark.operators.route import route
 from logging_spark.operators.rules import Rule
+from logging_spark.plans.job import transform
 
 
 def read_turns_stream(spark: SparkSession, input_dir: str,
@@ -208,20 +206,9 @@ def run_incremental(
     if cross_batch_dedup:
         turns = streaming_dedup(turns, watermark)
 
-    from logging_spark.operators.dedup import dedup_latest_wins
-
     def process(batch: DataFrame, batch_id: int) -> None:
-        df = parse_turns(dedup_latest_wins(batch))
-        df = df.select(
-            "conv_id", "turn_idx", "role", "text", "tool", "ts",
-            F.col("parsed.level").alias("level"),
-            F.col("parsed.component").alias("component"),
-            F.col("parsed.message").alias("message"),
-            F.col("parsed.attrs").alias("attrs"),
-        )
-        df = enrich(df, lookup_df)
-        routed = route(df, rules)
-        (routed.write.mode("append").partitionBy("sink_name").parquet(sink_dir))
+        routed = transform(batch, lookup_df, rules).drop("bucket")
+        routed.write.mode("append").partitionBy("sink_name").parquet(sink_dir)
 
     writer = (turns.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))

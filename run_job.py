@@ -78,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = active or build_session("logging-spark-job")
     if active is not None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     from logging_spark import obs, synth
     from pyspark.sql import functions as F

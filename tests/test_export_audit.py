@@ -98,3 +98,20 @@ def test_write_range_shards_contiguous_sorted(spark, tmp_path):
     plan = df.repartitionByRange(8, F.col("v"))._jdf.queryExecution() \
         .executedPlan().toString()
     assert "rangepartitioning" in plan.lower()
+
+
+def test_write_range_shards_rewrite_with_fewer_shards(spark, tmp_path):
+    """A 2-shard rewrite over a 4-shard tree leaves exactly the second
+    frame: its manifest, read back from the committed tree, lists 2
+    shards and 500 rows, none from the first write."""
+    from logging_spark.operators.export import write_range_shards
+    path = str(tmp_path / "rs")
+    write_range_shards(spark.range(1000).withColumnRenamed("id", "v"),
+                       path, "v", n_shards=4)
+    second = spark.range(1000, 1500).withColumnRenamed("id", "v")
+    man = write_range_shards(second, path, "v", n_shards=2).collect()
+    assert [r["shard"] for r in man] == [0, 1]
+    assert sum(r["n_rows"] for r in man) == 500
+    assert (man[0]["lo"], man[-1]["hi"]) == (1000, 1499)
+    assert sorted(r["v"] for r in spark.read.parquet(path).collect()) == \
+        list(range(1000, 1500))

@@ -56,6 +56,22 @@ def test_jsonl_sharded_write_is_deterministic(spark, tmp_path):
         assert len(glob.glob(os.path.join(a, "part-*"))) == 1
 
 
+def test_jsonl_sharded_rewrite_with_fewer_shards_keeps_no_stale_shard(
+        spark, tmp_path):
+    """An overwrite replaces the whole export: rewriting 4 shards as 2
+    leaves no shard=2/3 directory of the first frame behind (a
+    session-wide dynamic partition overwrite kept them)."""
+    p = str(tmp_path / "s")
+    first = spark.range(1000).select(F.col("id").alias("doc_id"))
+    second = spark.range(1000, 1500).select(F.col("id").alias("doc_id"))
+    write_jsonl(first, p, n_shards=4, id_col="doc_id")
+    write_jsonl(second, p, n_shards=2, id_col="doc_id")
+    assert [os.path.basename(s) for s in jsonl_shard_paths(p)] == [
+        "shard=0", "shard=1"]
+    back = read_jsonl(spark, p, "doc_id long")
+    assert sorted(r["doc_id"] for r in back.collect()) == list(range(1000, 1500))
+
+
 def test_jsonl_corrupt_lines_quarantine(spark, tmp_path):
     p = str(tmp_path / "bad")
     os.makedirs(p)

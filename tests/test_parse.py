@@ -2,7 +2,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from logging_spark.functions.parse import parse_turns
+from logging_spark.functions.parse import parse_turns, parsed_udf
 
 LINES = [
     ("[INFO] scheduler: request code=17 shard=3",),
@@ -46,7 +46,7 @@ def test_parse_udf_golden(spark):
     df = spark.createDataFrame(LINES, "text string").withColumn(
         "ord", F.monotonically_increasing_id()
     )
-    rows = parse_turns(df, use_udf=True).orderBy("ord").collect()
+    rows = df.withColumn("parsed", parsed_udf(F.col("text"))).orderBy("ord").collect()
     _check(rows)
 
 
@@ -56,7 +56,8 @@ def test_builtin_and_udf_agree_on_synth(spark):
     df = synth.transcripts(spark, n_conversations=20, turns_per_conv=10,
                            hot_conversations=1, hot_factor=5)
     a = parse_turns(df).select("conv_id", "turn_idx", "ts", "parsed")
-    b = parse_turns(df, use_udf=True).select("conv_id", "turn_idx", "ts", "parsed")
+    b = df.withColumn("parsed", parsed_udf(F.col("text"))).select(
+        "conv_id", "turn_idx", "ts", "parsed")
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
@@ -89,8 +90,8 @@ def test_parse_builtin_matches_udf_on_edge_cases(spark):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(s,) for s in EDGE_LINES], "text string")
-    a = parse_turns(df, use_udf=False).select("text", "parsed").collect()
-    b = parse_turns(df, use_udf=True).select("text", "parsed").collect()
+    a = parse_turns(df).select("text", "parsed").collect()
+    b = df.withColumn("parsed", parsed_udf(F.col("text"))).select("text", "parsed").collect()
 
     def norm(rows):
         out = {}

@@ -174,6 +174,34 @@ def test_crash_between_clear_and_write_ends_exact(spark, fixtures, tmp_path_fact
     assert _snapshot(cat) == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
 
 
+def test_crash_inside_the_write_ends_exact(spark, fixtures, tmp_path_factory):
+    """The sink write itself fails part-way: tasks of other buckets may
+    already have committed files into owned cells, and no done row was
+    appended. The re-run under the same snapshot owns every bucket,
+    clears those cells and ends equal to a fresh run."""
+    class CrashInWrite(Catalog):
+        crashed = False
+
+        def overwrite_partitions(self, df, table, partition_cols):
+            if not self.crashed:
+                self.crashed = True
+                df = df.withColumn("text", F.when(
+                    F.col("bucket") == 5, F.raise_error(F.lit("crash inside the write"))
+                ).otherwise(F.col("text")))
+            super().overwrite_partitions(df, table, partition_cols)
+
+    turns, lookup, rules = fixtures
+    assert ckpt.with_bucket(turns, 8).where("bucket = 5").count() > 0
+    cat = CrashInWrite(spark, str(tmp_path_factory.mktemp("wh")))
+    with pytest.raises(Exception, match="crash inside the write"):
+        run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                     input_snapshot="snap-N")
+    res = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                       input_snapshot="snap-N")
+    assert res.buckets_skipped == 0
+    assert _snapshot(cat) == _fresh(spark, turns, lookup, rules, tmp_path_factory)
+
+
 def test_empty_input_empty_warehouse(spark, fixtures, tmp_path_factory):
     """Empty input finishes: no bucket is done and the aggregate tables
     exist, empty, with their usual schema."""
@@ -189,7 +217,7 @@ def test_empty_input_empty_warehouse(spark, fixtures, tmp_path_factory):
 
 
 def test_table_exists_sees_partitioned_sink(spark, fixtures, tmp_path_factory):
-    """A dynamic overwrite leaves only `sink_name=...` dirs at the sink
+    """A partitioned append leaves only `sink_name=...` dirs at the sink
     table's root, and that is a table."""
     turns, lookup, rules = fixtures
     cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))

@@ -62,3 +62,15 @@ def test_holt_winters_tracks_planted_seasonality(spark):
                           period=7).collect()[0]
     want = (1000 + 5 * 35 + season[35 % 7]) * 1000
     assert abs(r["forecast_x1000"] - want) < 30_000  # within 30 units
+
+
+def test_holt_winters_fold_evaluated_once(spark):
+    """The optimized plan evaluates the fold once, in an inner Project;
+    the outer Project only reads fields of that struct (collapsing the
+    two would re-run the interpreted fold once per output column)."""
+    rows = [Row(key=f"k{k}", o=t, v=t % 7) for k in range(2) for t in range(20)]
+    plan = holt_winters_fold(spark.createDataFrame(rows), "key", "o", "v",
+                             period=7)._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "Project"
+    assert "aggregate(" not in plan.simpleString(10000)
+    assert "aggregate(" in plan.child().simpleString(10000)
