@@ -13,8 +13,7 @@ Same shape as cusum_fold/holt_fold: ONE shuffle collects each key's
 — no Python, no window, and the recurrence is integer arithmetic so
 the DuckDB recursive-CTE oracle matches bit-for-bit. A key's series
 must fit in a row (period-aggregate or shard upstream past ~1e6
-events/key). The streaming twin (streaming/ratelimit.py) carries the
-same fold as O(1) state and is pinned row-identical in pytest.
+events/key).
 """
 
 from __future__ import annotations

@@ -116,9 +116,9 @@ def sessionize_incremental(prior: DataFrame, new_events: DataFrame,
                            gap_seconds: int = 1800) -> DataFrame:
     """Incrementally maintain a committed session-rollup table
     (``session_rollup`` shape) as new events arrive, recomputing ONLY
-    the keys the delta touches — the batch-maintenance twin of the
-    streaming sessionizer, for the nightly-delta-over-committed-table
-    case where replaying all history per run is the scale bug.
+    the keys the delta touches — for the nightly delta over a
+    committed table, where replaying all history per run is the scale
+    bug.
 
     Correctness rests on an interval-merge identity: a session is a
     maximal run of events with internal gaps <= gap, so its INTERIOR

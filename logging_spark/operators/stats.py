@@ -613,12 +613,12 @@ def chi2_independence(df: DataFrame, row_col: str, col_col: str,
 
 def binned_ks(cur: DataFrame, ref: DataFrame, bucket_col: str,
               cnt_col: str) -> DataFrame:
-    """Binned two-sample KS distance between two histograms — the
-    batch twin of streaming/drift.py: D over the bucketed ECDFs,
-    exact integers (D_num = max |cumCur*nRef - cumRef*nCur| over the
-    full-outer bucket union). With matched binning this IS the KS
-    statistic of the binned data; the binning granularity is the
-    only approximation and it is explicit in the input.
+    """Binned two-sample KS distance between two histograms: D over
+    the bucketed ECDFs, exact integers (D_num = max |cumCur*nRef -
+    cumRef*nCur| over the full-outer bucket union). With matched
+    binning this IS the KS statistic of the binned data; the binning
+    granularity is the only approximation and it is explicit in the
+    input.
 
     One row: n_cur, n_ref, d_num, d_x1e6.
     """

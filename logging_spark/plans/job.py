@@ -75,6 +75,10 @@ ROUTED_COLS = [
 
 @dataclass
 class PipelineResult:
+    """One run's outcome. `buckets_processed` counts the buckets the run
+    owned (range(num_buckets) minus the snapshot's done rows), empty
+    ones included: a bucket with no input rows gets no done row, so it
+    stays owned and is counted again on the next run."""
     run_id: str
     buckets_processed: int
     buckets_skipped: int
@@ -93,7 +97,7 @@ def transform(
 ) -> DataFrame:
     """The pure (side-effect-free) parse->enrich->route plan; returns
     the routed DataFrame with ROUTED_COLS. Usable standalone (tests,
-    oracle comparison, streaming foreachBatch)."""
+    oracle comparison, run_job.py's warm-up)."""
     df = dedup_latest_wins(ckpt.with_bucket(turns, num_buckets))
     df = parse_turns(df)
     df = df.select(

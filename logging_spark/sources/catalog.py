@@ -4,7 +4,7 @@ Parquet-directory fallback otherwise.
 STATUS OF THE ICEBERG BRANCH: designed-for, NOT exercised — this image
 ships no iceberg-spark-runtime jar and has no network to fetch one, so
 every `self.iceberg` path below (snapshot reads, DELETE FROM,
-MERGE INTO) is written against the published Iceberg-Spark API but has
+createOrReplace) is written against the published Iceberg-Spark API but has
 never run here. The tested, supported backend in this repo is the
 parquet fallback; treat the Iceberg code as a deployment template to
 be validated when a jar is available (drop it on the classpath and the
@@ -30,6 +30,9 @@ A cell whose new output is empty therefore keeps no old rows, and no
 session conf changes how other writers overwrite. Sink tables are
 created on first write — the analog of auto topic creation
 (kafka.go:30-56).
+
+The reference's field-wise Apply (S5) is `merge_frames`, a pure
+frame-to-frame merge; the `pipe_merge_upsert` contract query runs it.
 """
 
 from __future__ import annotations
@@ -198,35 +201,6 @@ class Catalog:
             df.writeTo(self._ident(table)).createOrReplace()
             return
         self._swap(table, df.write.mode("overwrite").parquet)
-
-    def merge_upsert(self, df: DataFrame, table: str, keys: list[str],
-                     order_col: str | None = None) -> None:
-        """S5 Apply with the reference's FIELD-WISE merge semantics
-        (datasource.go:206-276): see merge_frames. Intended for
-        control-plane-sized tables (rule/config/dimension) — the hot
-        data path stays on overwrite_partitions. On Iceberg this is a
-        single atomic MERGE INTO; the parquet fallback writes the
-        merged frame through _swap, so the source data outlives a
-        failed write (in place, mode('overwrite') would delete it
-        first, leaving only non-reliable localCheckpoint blocks)."""
-        if not self.table_exists(table):
-            if order_col is not None:
-                df = merge_frames(df.limit(0), df, keys, order_col)
-            self.append(df, table)
-            return
-        if self.iceberg:
-            value_cols = [c for c in df.columns if c not in keys]
-            tmp = f"_merge_src_{table.replace('.', '_')}"
-            df.createOrReplaceTempView(tmp)
-            on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-            sets = ", ".join(f"t.{c} = coalesce(s.{c}, t.{c})" for c in value_cols)
-            self.spark.sql(
-                f"MERGE INTO {self._ident(table)} t USING {tmp} s ON {on} "
-                f"WHEN MATCHED THEN UPDATE SET {sets} "
-                f"WHEN NOT MATCHED THEN INSERT *")
-            return
-        merged = merge_frames(self.read(table), df, keys, order_col)
-        self._swap(table, merged.write.mode("overwrite").parquet)
 
     def drop(self, table: str) -> None:
         if self.iceberg:

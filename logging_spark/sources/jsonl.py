@@ -76,26 +76,3 @@ def jsonl_shard_paths(path: str) -> list[str]:
     return sorted(
         os.path.join(path, d) for d in os.listdir(path)
         if d.startswith("shard="))
-
-
-def stream_jsonl(spark: SparkSession, path: str,
-                 schema: T.StructType | str,
-                 corrupt_col: str = "_corrupt_record",
-                 max_files_per_trigger: int | None = None) -> DataFrame:
-    """Incremental JSONL ingest: the file-source streaming twin of
-    read_jsonl (Spark's processed-files log provides exactly-once
-    file pickup — the S3 list-then-watch analog, same stance as
-    streaming/incremental.py). Explicit schema for the same reason
-    as the batch reader; new shard files dropped into `path` are
-    consumed once each."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    if corrupt_col and corrupt_col not in [f.name for f in schema.fields]:
-        schema = schema.add(corrupt_col, T.StringType())
-    r = (spark.readStream.schema(schema)
-         .option("mode", "PERMISSIVE")
-         .option("timestampFormat", TS_FORMAT)
-         .option("columnNameOfCorruptRecord", corrupt_col))
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.json(path)

@@ -1,6 +1,6 @@
 """Custom Python DataSource (Spark 4 `pyspark.sql.datasource`): a
 deterministic transcript generator as a first-class `spark.read
-.format(...)` / `spark.readStream.format(...)` source.
+.format(...)` source (`run_job.py --input-pysource`).
 
 Why this exists (beyond the DataFrame-expression generator in
 synth.py): it exercises the THIRD ingestion surface a production
@@ -16,12 +16,7 @@ Python DataSource API gives that connector:
 - **filter pushdown** (`pushFilters`): `conv_id = 'x'` / `IN (...)`
   predicates prune whole buckets before any row is generated —
   the Python-connector analog of parquet's PushedFilters (requires
-  `spark.sql.python.filterPushdown.enabled=true`);
-- **a replayable streaming twin** (SimpleDataSourceStreamReader):
-  offset = conversations emitted; `readBetweenOffsets` regenerates
-  any range deterministically, so checkpoint recovery replays
-  byte-identical micro-batches (the at-least-once contract a real
-  queue connector must honor).
+  `spark.sql.python.filterPushdown.enabled=true`).
 
 Determinism: every row is a pure function of (conv_id, turn_idx) via
 md5 — same options, same rows, any cluster, any partitioning.
@@ -30,22 +25,16 @@ md5 — same options, same rows, any cluster, any partitioning.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
-from dataclasses import dataclass
 from datetime import datetime, timedelta
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     EqualTo,
     Filter,
     In,
     InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 SCHEMA_DDL = ("conv_id string, turn_idx int, role string, text string, "
@@ -107,36 +96,6 @@ class _Reader(DataSourceReader):
             yield from _rows_for(cid, self.turns)
 
 
-class _StreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, options: dict):
-        self.n = int(options.get("n_conversations", 100))
-        self.turns = int(options.get("turns_per_conv", 20))
-        self.per_batch = int(options.get("convs_per_batch", 10))
-
-    def initialOffset(self) -> dict:
-        return {"conv": 0}
-
-    def _range_rows(self, lo: int, hi: int):
-        for i in range(lo, hi):
-            yield from _rows_for(_conv_id(i), self.turns)
-
-    def read(self, start: dict):
-        lo = int(start["conv"])
-        hi = min(self.n, lo + self.per_batch)
-        # iter(list): the wrapper wants an ITERATOR and pickles it
-        # for prefetch caching — a list fails the iterator check, a
-        # generator fails pickle; a list_iterator passes both. Driver-
-        # side batches are this reader's documented small-batch niche
-        # (the batch reader is the scale path).
-        return iter(list(self._range_rows(lo, hi))), {"conv": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # deterministic replay — checkpoint recovery re-emits the
-        # identical rows for any committed offset range
-        return iter(list(self._range_rows(int(start["conv"]),
-                                          int(end["conv"]))))
-
-
 class TranscriptDataSource(DataSource):
     """`spark.dataSource.register(TranscriptDataSource)` then
     `spark.read.format("synthetic_transcripts")...`."""
@@ -150,71 +109,3 @@ class TranscriptDataSource(DataSource):
 
     def reader(self, schema) -> _Reader:
         return _Reader(self.options)
-
-    def simpleStreamReader(self, schema) -> _StreamReader:
-        return _StreamReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> "_Writer":
-        return _Writer(self.options)
-
-
-# --------------------------------------------------------------------
-# Custom SINK: the two-phase-commit writer surface. Tasks stage part
-# files under <path>/_staging/ and return the staged name as their
-# commit message; the DRIVER publishes them (rename + _SUCCESS
-# manifest) only in commit(), and abort() removes every staged file —
-# so a failed job leaves NOTHING visible, the same all-or-nothing
-# contract every real connector sink must implement. Rows serialize
-# as JSONL (timestamps in the repo's microsecond-safe format).
-
-
-@dataclass
-class _PartMessage(WriterCommitMessage):
-    staged: str
-    n_rows: int
-
-
-class _Writer(DataSourceWriter):
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.fail_partition = int(options.get("fail_partition", -1))
-
-    def write(self, iterator) -> _PartMessage:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        if ctx.partitionId() == self.fail_partition:
-            raise RuntimeError("injected task failure")
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.jsonl"
-        staged = os.path.join(staging, name)
-        n = 0
-        with open(staged, "w") as f:
-            for row in iterator:
-                d = row.asDict()
-                for k, v in d.items():
-                    if isinstance(v, datetime):
-                        d[k] = v.strftime("%Y-%m-%d %H:%M:%S.%f")
-                f.write(json.dumps(d, sort_keys=True) + "\n")
-                n += 1
-        return _PartMessage(staged=staged, n_rows=n)
-
-    def commit(self, messages) -> None:
-        files, total = [], 0
-        for m in messages:
-            final = os.path.join(self.path, os.path.basename(m.staged))
-            os.replace(m.staged, final)
-            files.append(os.path.basename(final))
-            total += m.n_rows
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            json.dump({"files": sorted(files), "n_rows": total}, f)
-        staging = os.path.join(self.path, "_staging")
-        if os.path.isdir(staging) and not os.listdir(staging):
-            os.rmdir(staging)
-
-    def abort(self, messages) -> None:
-        import shutil
-
-        shutil.rmtree(os.path.join(self.path, "_staging"),
-                      ignore_errors=True)

@@ -3,10 +3,10 @@
 The reference's S1 source tails container log FILES on each node
 (filebeat-style; SURVEY S1 — per-(service, pod) paths with byte-offset
 resume). The Spark-native equivalent is the text file source: one row
-per line, file provenance via input_file_name(), incremental pickup
-via the file-source's processed-files log (readStream.text — Spark
-tracks which files are done, the analog of the reference's per-file
-offsets at file granularity).
+per line, file provenance via input_file_name(). The job is batch:
+a re-run under a new `--snapshot` picks up what changed, and per-
+bucket resume (sources/checkpoint.py) stands in for the reference's
+per-file offsets.
 
 Everything downstream is the existing pipeline: `parse_turns`
 (codegen grok twin) structures the lines; conv/turn identity is
@@ -17,8 +17,7 @@ Scale shape: the text scan is splittable per file (uncompressed) and
 parallel across files; provenance columns are metadata-only (no read
 amplification). At 100 TB of logs the file listing itself is the
 bottleneck — point the reader at date-partitioned directories
-(path glob) so listing prunes by day, the same prefix-pruning story
-as the parquet layout in sources/layout.py.
+(path glob) so listing prunes by day.
 """
 
 from __future__ import annotations
@@ -50,18 +49,6 @@ def read_log_files(spark: SparkSession, path: str,
     if glob:
         reader = reader.option("pathGlobFilter", glob.split("/")[-1])
     return _with_provenance(reader.text(path))
-
-
-def tail_log_files(spark: SparkSession, path: str,
-                   max_files_per_trigger: int = 64) -> DataFrame:
-    """Streaming tail of a log directory — the S1 continuous form.
-    The file-source checkpoint remembers processed files, so restarts
-    resume without re-emitting (at-least-once within a file, exactly
-    the reference's semantics at file granularity)."""
-    return _with_provenance(
-        spark.readStream
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(path))
 
 
 def logfile_input(spark: SparkSession, path: str) -> DataFrame:
@@ -96,8 +83,7 @@ def logfile_input(spark: SparkSession, path: str) -> DataFrame:
 def logfile_turns(lines: DataFrame) -> DataFrame:
     """Raw provenance-tagged lines -> structured turns: conv identity
     from the (service, pod) path pair, per-line parse via the codegen
-    grok twin. Works identically on the batch and streaming frames
-    (same lazy plan, no state)."""
+    grok twin (a lazy plan with no state)."""
     turns = (lines
              .where(F.length(F.trim(F.col("value"))) > 0)
              .select(

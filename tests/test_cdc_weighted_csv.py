@@ -1,5 +1,4 @@
-"""CDC changeset/apply round-trip, distributed weighted median, CSV
-ingest with quarantine."""
+"""CDC changeset/apply round-trip and distributed weighted median."""
 
 from __future__ import annotations
 
@@ -64,38 +63,3 @@ def test_weighted_median_empty(spark):
     df = spark.createDataFrame([], "v int, w int")
     got = weighted_median(df, "v", "w").first()
     assert got["total_weight"] == 0 and got["median"] is None
-
-
-def test_csv_roundtrip_and_quarantine(spark, tmp_path):
-    from logging_spark.sources.csv import (quarantine_split, read_csv,
-                                           write_csv)
-    schema = "k int, s string, v double"
-    df = spark.createDataFrame(
-        [(1, 'comma, "quote"', 1.5), (2, None, 2.5),
-         (3, "", 3.5), (4, "line\nbreak? no: escaped", 4.5)],
-        schema)
-    # embedded newline would break splitting: writer must escape or
-    # the value must not contain raw \n — we assert the round-trip
-    p = str(tmp_path / "csv")
-    write_csv(df.where("k <= 3"), p, n_shards=2)
-    back = read_csv(spark, p, schema)
-    clean, dead = quarantine_split(back)
-    assert dead.count() == 0
-    got = {r["k"]: (r["s"], r["v"]) for r in clean.collect()}
-    assert got[1] == ('comma, "quote"', 1.5)
-    assert got[2] == (None, 2.5)   # NULL survives as NULL
-    assert got[3] == ("", 3.5)     # empty string survives as ''
-
-
-def test_csv_malformed_rows_quarantined(spark, tmp_path):
-    from logging_spark.sources.csv import quarantine_split, read_csv
-    p = str(tmp_path / "raw")
-    import os
-    os.makedirs(p)
-    with open(f"{p}/part.csv", "w") as f:
-        f.write("k,s,v\n1,ok,1.5\nnot_an_int,bad,2.5\n3,ok,3.5\n")
-    back = read_csv(spark, p, "k int, s string, v double")
-    clean, dead = quarantine_split(back)
-    assert clean.count() == 2
-    assert dead.count() == 1
-    assert "not_an_int" in dead.first()["raw_line"]

@@ -85,36 +85,3 @@ def test_jsonl_corrupt_lines_quarantine(spark, tmp_path):
     bad = [r for r in rows if r._corrupt_record is not None]
     assert {r.conv_id for r in good} == {"ok", "ok2"}
     assert len(bad) == 1 and bad[0].conv_id is None
-
-
-def test_stream_jsonl_incremental_pickup(spark, tmp_path):
-    """Files dropped between triggers are each consumed exactly once;
-    rows match the batch reader over the same directory."""
-    from logging_spark.sources.jsonl import stream_jsonl
-
-    src, out = str(tmp_path / "in"), str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    os.makedirs(src)
-    schema = "conv_id string, turn_idx int"
-
-    def drop(name, rows):
-        with open(os.path.join(src, name), "w") as f:
-            for cid, ti in rows:
-                f.write('{"conv_id": "%s", "turn_idx": %d}\n' % (cid, ti))
-
-    drop("a.jsonl", [("c1", 0), ("c1", 1)])
-    q = (stream_jsonl(spark, src, schema)
-         .drop("_corrupt_record")
-         .writeStream.format("parquet")
-         .option("path", out).option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    drop("b.jsonl", [("c2", 0)])
-    q2 = (stream_jsonl(spark, src, schema)
-          .drop("_corrupt_record")
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ck)
-          .trigger(availableNow=True).start())
-    q2.awaitTermination(60)
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert got == [("c1", 0), ("c1", 1), ("c2", 0)]

@@ -1,5 +1,5 @@
 """Custom Python DataSource (sources/pysource.py): partition-parallel
-deterministic reads, conv_id filter pushdown, replayable streaming."""
+deterministic reads and conv_id filter pushdown."""
 
 from __future__ import annotations
 
@@ -67,71 +67,3 @@ def test_filter_pushdown_prunes_partitions(spark):
         .where(F.col("conv_id") == "conv000003").collect()
     assert len(got) == 5 and {r["conv_id"] for r in got} == \
         {"conv000003"}
-
-
-@pytest.mark.slow
-def test_stream_replays_batch_rows(spark, tmp_path):
-    out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
-    # a simple stream reader discovers its end offset batch by
-    # batch, so one availableNow drain commits only the offsets known
-    # at start — loop drains until the sink stops growing (each run
-    # resumes from the checkpoint)
-    def drain():
-        q = (spark.readStream.format("synthetic_transcripts")
-             .option("n_conversations", 25).option("turns_per_conv", 4)
-             .option("convs_per_batch", 10)
-             .load()
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", chk)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    last = -1
-    for _ in range(6):
-        drain()
-        n = spark.read.parquet(out).count()
-        if n == last:
-            break
-        last = n
-    streamed = sorted(map(tuple, spark.read.parquet(out).collect()))
-    batch = sorted(map(tuple, _read(spark, n_conversations=25,
-                                    turns_per_conv=4).collect()))
-    assert streamed == batch  # stream == batch, row for row
-
-
-def test_writer_two_phase_commit(spark, tmp_path):
-    import json as _json
-    import os
-    path = str(tmp_path / "sink")
-    df = _read(spark, n_conversations=12, turns_per_conv=5,
-               buckets=4)
-    (df.write.format("synthetic_transcripts")
-       .option("path", path).mode("append").save())
-    # published atomically: _SUCCESS manifest + no staging left
-    man = _json.load(open(os.path.join(path, "_SUCCESS")))
-    assert man["n_rows"] == 60
-    assert not os.path.exists(os.path.join(path, "_staging"))
-    files = [f for f in os.listdir(path) if f.endswith(".jsonl")]
-    assert sorted(files) == man["files"]
-    n = sum(1 for f in files
-            for _ in open(os.path.join(path, f)))
-    assert n == 60
-
-
-def test_writer_abort_leaves_nothing_visible(spark, tmp_path):
-    import os
-    import pytest as _pytest
-    path = str(tmp_path / "sink2")
-    df = _read(spark, n_conversations=12, turns_per_conv=5,
-               buckets=4)
-    with _pytest.raises(Exception):
-        (df.write.format("synthetic_transcripts")
-           .option("path", path).option("fail_partition", 2)
-           .mode("append").save())
-    # all-or-nothing: no _SUCCESS, no committed part files, staging
-    # fully reclaimed by abort()
-    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
-    if os.path.isdir(path):
-        assert [f for f in os.listdir(path)
-                if f.endswith(".jsonl")] == []
-        assert not os.path.exists(os.path.join(path, "_staging"))

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from logging_spark import synth
 from logging_spark.plans.job import ROUTED_TABLE, read_sink, run_pipeline
 from logging_spark.sources import checkpoint as ckpt
-from logging_spark.sources.catalog import Catalog
+from logging_spark.sources.catalog import Catalog, merge_frames
 from logging_spark.sources.checkpoint import CHECKPOINT_TABLE
 
 
@@ -132,6 +132,25 @@ def test_shrunk_input_new_snapshot_equals_fresh_run(spark, fixtures, tmp_path_fa
     assert _snapshot(cat) == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
 
 
+def test_empty_bucket_stays_owned_until_it_has_rows(spark, fixtures, tmp_path_factory):
+    """An owned bucket with no input rows gets no done row, so it stays
+    owned. A run on input without bucket 3 commits the other seven; a
+    run on the full input under the same snapshot then processes bucket
+    3 alone. perfbench's resume_half commits half the buckets this way,
+    and a done row for an empty bucket would make its timed runs skip
+    every bucket."""
+    turns, lookup, rules = fixtures
+    shrunk = ckpt.with_bucket(turns, 8).where("bucket != 3").drop("bucket")
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
+    r1 = run_pipeline(spark, shrunk, lookup, rules, cat, num_buckets=8,
+                      input_snapshot="snap-S")
+    assert (r1.buckets_processed, r1.buckets_skipped) == (8, 0)
+    r2 = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                      input_snapshot="snap-S")
+    assert (r2.buckets_processed, r2.buckets_skipped) == (1, 7)
+    assert _snapshot(cat) == _fresh(spark, turns, lookup, rules, tmp_path_factory)
+
+
 def test_disabled_rule_new_snapshot_empties_its_sink(spark, fixtures, tmp_path_factory):
     turns, lookup, rules = fixtures
     off = rules.withColumn("enabled", F.col("enabled") & (F.col("sink_name") != "errors"))
@@ -227,35 +246,31 @@ def test_table_exists_sees_partitioned_sink(spark, fixtures, tmp_path_factory):
     assert cat.table_exists(ROUTED_TABLE)
 
 
-def test_merge_upsert_field_wise(spark, tmp_path_factory):
-    """S5 Apply with reference merge semantics (datasource.go:206-276):
-    a NULL field in an update row preserves the existing value; new
-    keys insert; re-applying the same update is idempotent."""
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
+def test_merge_upsert_field_wise(spark):
+    """S5 Apply with reference merge semantics (datasource.go:206-276),
+    as the `pipe_merge_upsert` contract query runs it: a NULL field in
+    an update row preserves the existing value; new keys insert;
+    re-applying the same update is idempotent."""
     schema = "k string, a string, b string"
-    cat.merge_upsert(
-        spark.createDataFrame([("k1", "a1", "b1"), ("k2", "a2", "b2")], schema),
-        "cfg.rules", keys=["k"])
+    base = spark.createDataFrame([("k1", "a1", "b1"), ("k2", "a2", "b2")], schema)
     # partial update: b=None must NOT clobber existing b1; k3 inserts
     upd = spark.createDataFrame([("k1", "a1x", None), ("k3", "a3", None)], schema)
-    cat.merge_upsert(upd, "cfg.rules", keys=["k"])
-    got = {r["k"]: (r["a"], r["b"]) for r in cat.read("cfg.rules").collect()}
+    merged = merge_frames(base, upd, ["k"])
+    got = {r["k"]: (r["a"], r["b"]) for r in merged.collect()}
     assert got == {"k1": ("a1x", "b1"), "k2": ("a2", "b2"), "k3": ("a3", None)}
     # idempotent re-apply
-    cat.merge_upsert(upd, "cfg.rules", keys=["k"])
-    got2 = {r["k"]: (r["a"], r["b"]) for r in cat.read("cfg.rules").collect()}
+    got2 = {r["k"]: (r["a"], r["b"])
+            for r in merge_frames(merged, upd, ["k"]).collect()}
     assert got2 == got
 
 
-def test_merge_upsert_latest_wins_order_col(spark, tmp_path_factory):
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
+def test_merge_upsert_latest_wins_order_col(spark):
     schema = "k string, v string, ts long"
-    cat.merge_upsert(spark.createDataFrame([("k1", "old", 1)], schema),
-                     "cfg.vals", keys=["k"], order_col="ts")
+    first = spark.createDataFrame([("k1", "old", 1)], schema)
+    first = merge_frames(first.limit(0), first, ["k"], order_col="ts")
     # two update rows for the same key: highest ts wins
     upd = spark.createDataFrame([("k1", "mid", 5), ("k1", "new", 9)], schema)
-    cat.merge_upsert(upd, "cfg.vals", keys=["k"], order_col="ts")
-    rows = cat.read("cfg.vals").collect()
+    rows = merge_frames(first, upd, ["k"], order_col="ts").collect()
     assert len(rows) == 1 and rows[0]["v"] == "new" and rows[0]["ts"] == 9
 
 

@@ -1,13 +1,12 @@
-"""Raw log-file source (sources/textlog.py): batch read, streaming
-tail resume, and parse-on-top — the reference's S1 input mode
+"""Raw log-file source (sources/textlog.py): batch read and
+parse-on-top — the reference's S1 input mode
 (file tail per (service, pod)) re-expressed as Spark's text source."""
 
 from __future__ import annotations
 
 import os
 
-from logging_spark.sources.textlog import (logfile_turns, read_log_files,
-                                           tail_log_files)
+from logging_spark.sources.textlog import logfile_turns, read_log_files
 
 LINES_A = ["[INFO] comp-1: start code=1 k=a",
            "[ERROR] comp-2: boom code=500 k=b",
@@ -41,29 +40,6 @@ def test_logfile_turns_parses_and_keys(spark, tmp_path):
     row = {r["conv_id"]: r for r in out}["svc-b/pod-2"]
     assert row["parsed"]["level"] == "WARN"
     assert row["parsed"]["component"] == "comp-1"
-
-
-def test_tail_log_files_resumes_without_reemit(spark, tmp_path):
-    base, out, chk = (str(tmp_path / k) for k in ("logs", "out", "chk"))
-    _write_logs(base)
-
-    def drain():
-        q = (logfile_turns(tail_log_files(spark, f"{base}/*"))
-             .select("conv_id", "text").writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", chk)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    drain()
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 3
-    # new file appears -> only ITS lines are emitted on the next drain
-    with open(f"{base}/svc-a/pod-3.log", "w") as f:
-        f.write("[INFO] comp-9: more code=7 k=z\n")
-    drain()
-    got = [r["conv_id"] for r in spark.read.parquet(out).collect()]
-    assert len(got) == 4 and got.count("svc-a/pod-3") == 1
 
 
 def test_logfile_input_matches_input_hint_and_runs_pipeline(spark, tmp_path):
