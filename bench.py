@@ -243,6 +243,8 @@ def _submit_once(here: str, cpus: int, tag: str, input_dir: str) -> dict:
         "--input-parquet", f"{input_dir}/turns",
         "--lookup-parquet", f"{input_dir}/lookup",
         "--num-buckets", "32", "--snapshot", f"bench-{cpus}-{tag}")
+    stats["sink_files"] = sum(f.endswith(".parquet") for _, _, fs in
+                              os.walk(os.path.join(wh, "sinks", "routed")) for f in fs)
     shutil.rmtree(wh, ignore_errors=True)
     return stats
 
@@ -294,6 +296,7 @@ def run_scaling(pair: tuple[int, int], n_conversations: int = 80000,
                       "all_seconds": [s["seconds"] for s in ss],
                       "n_input_turns": best["n_input_turns"],
                       "routed_rows": sum(v["n_rows"] for v in best["per_sink_counts"].values()),
+                      "sink_files": best["sink_files"],
                       "turns_per_sec": best["turns_per_sec"],
                       "turns_per_sec_median": round(med_tput, 1),
                       "phase_seconds_best": best.get("phase_seconds", {})}

@@ -9,13 +9,15 @@ Batch formalization: keep exactly one row per (conv_id, turn_idx),
 the latest by ts (tie-broken deterministically by text) — "per-turn
 text equality under stable turn ordering".
 
-Scale: a single shuffle. The window partitions by the FULL composite
-key (conv_id, turn_idx), which is deliberately skew-proof: a hot
-conversation with 10^8 turns hashes across the whole cluster instead
-of landing on one reducer, so no salting is needed for THIS operator.
-(Per-conversation aggregates downstream are where skew handling
-lives — see skew.py.) Each window group is tiny (duplicate count per
-turn, ~1-2 rows), so the sort inside groups is trivially cheap.
+Scale: a single shuffle. By default the window partitions by the
+full composite key (conv_id, turn_idx), so a hot conversation's turns
+hash across the cluster. The job (plans/job.py:transform) keys it on
+(_pid, conv_id, turn_idx) instead, where _pid = (owned bucket, salt)
+and the salt is a hash of (conv_id, turn_idx): its shuffle also lays
+out the sink write, and the salt spreads a hot conversation over its
+bucket's tasks. Either key is a function of (conv_id, turn_idx), so
+the survivors are the same. Each window group is tiny (duplicate
+count per turn, ~1-2 rows), so the sort inside groups is cheap.
 """
 
 from __future__ import annotations

@@ -8,13 +8,23 @@ write -> aggregates recomputed from the committed sink cells.
 Physical plan, annotated for the 100 TB case:
 
   scan + `bucket IN owned` (literal filter)      | no shuffle
-  -> dedup window over (conv_id, turn_idx)       | shuffle #1 (skew-proof key)
+  -> repartitionById(|owned| x S, _pid)          | shuffle #1: one partition
+                                                 |  per (owned bucket, salt),
+                                                 |  S = ceil(cores / |owned|)
+  -> dedup window over (_pid, conv_id, turn_idx) | no shuffle (the id
+                                                 |  partitioning satisfies it)
   -> parse (codegen) + enrich (broadcast join)   | no shuffle
   -> route (array+explode, codegen)              | no shuffle
-  -> write partitioned by (sink_name, bucket)    | no shuffle (writers keep
-                                                 |  the dedup partitioning)
+  -> write partitioned by (sink_name, bucket)    | no shuffle (a task writes
+                                                 |  one bucket's salt: <= S
+                                                 |  files per cell)
   -> per-bucket stats of the owned cells         | small shuffles over the
                                                  |  pruned cells only
+
+Skew: the salt is a hash of (conv_id, turn_idx), so a hot
+conversation's turns spread over its bucket's S tasks, and there are
+at least as many tasks as cores. With |owned| >= cores, S = 1 and a
+bucket is one task: size B so one bucket is a task's worth of input.
 
 Exactly one wide dependency over the input; everything between
 shuffles is one whole-stage-codegen span.
@@ -94,11 +104,33 @@ def transform(
     lookup_df: DataFrame,
     rules: list[Rule],
     num_buckets: int = 32,
+    owned: list[int] | None = None,
 ) -> DataFrame:
-    """The pure (side-effect-free) parse->enrich->route plan; returns
-    the routed DataFrame with ROUTED_COLS. Usable standalone (tests,
-    oracle comparison, run_job.py's warm-up)."""
-    df = dedup_latest_wins(ckpt.with_bucket(turns, num_buckets))
+    """The pure (side-effect-free) parse->enrich->route plan over the
+    rows of the `owned` buckets (default: every bucket); returns the
+    routed DataFrame with ROUTED_COLS. Usable standalone (tests,
+    oracle comparison, run_job.py's warm-up).
+
+    A row goes to partition (position of its bucket in sorted owned) * S
+    + pmod(xxhash64(conv_id, turn_idx), S), S = ceil(cores / |owned|):
+    an explicit count AQE never merges, and every partition holds one
+    bucket's salt, so a (sink, bucket) cell gets at most S files."""
+    owned = list(range(num_buckets)) if owned is None else sorted(owned)
+    df = ckpt.with_bucket(turns, num_buckets)
+    if len(owned) < num_buckets:
+        df = df.where(F.col("bucket").isin(owned))
+    n = max(len(owned), 1)
+    salts = -(-turns.sparkSession.sparkContext.defaultParallelism // n)
+    # position of each bucket in owned, looked up by index (no search)
+    pos = [-1] * num_buckets
+    for i, b in enumerate(owned):
+        pos[b] = i
+    pid = (F.array(*map(F.lit, pos))[F.col("bucket")] * salts
+           + F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salts)))
+    df = df.withColumn("_pid", pid.cast("int")).repartitionById(n * salts, "_pid")
+    # _pid is a function of (conv_id, turn_idx): the same dedup result,
+    # and the id partitioning satisfies the window with no second shuffle
+    df = dedup_latest_wins(df, keys=["_pid", "conv_id", "turn_idx"]).drop("_pid")
     df = parse_turns(df)
     df = df.select(
         "bucket", "conv_id", "turn_idx", "role", "text", "tool", "ts",
@@ -152,13 +184,12 @@ def run_pipeline(
     rules = load_rules(rules_df)
 
     # the run's one bucket decision: owned = range(B) - done. It drives
-    # the input filter, the cell clear, the stats read-back and the
-    # done rows this run appends.
+    # the input filter and the shuffle's layout (transform), the cell
+    # clear, the stats read-back and the done rows this run appends.
     done = ckpt.done_rows(catalog, input_snapshot)
     owned = ckpt.owned(done, num_buckets)
-    pend = ckpt.with_bucket(turns, num_buckets).where(F.col("bucket").isin(owned))
 
-    routed = transform(pend.drop("bucket"), lookup_df, rules, num_buckets)
+    routed = transform(turns, lookup_df, rules, num_buckets, owned)
     tw = time.time()
     # Observation metrics ride the WRITE action itself — transform-
     # stage counters (rows routed, text bytes) with no second scan
@@ -199,14 +230,14 @@ def run_pipeline(
     phase_secs["aggregate_checkpoint"] = time.time() - ta
 
     secs = time.time() - t0
-    phase_rows = [(run_id, "pipeline", input_snapshot, None, f"{secs:.3f}")] + [
-        (run_id, phase, input_snapshot, None, f"{s:.3f}")
+    phase_rows = [(run_id, "pipeline", input_snapshot, None, secs)] + [
+        (run_id, phase, input_snapshot, None, s)
         for phase, s in phase_secs.items()
     ] + [(run_id, f"observe:{k}", input_snapshot, v, None)
          for k, v in observed.items()]
     metrics = _frame(
         spark, pd.DataFrame(phase_rows, columns=["run_id", "phase", "key", "rows", "seconds"]),
-        "run_id string, phase string, key string, rows long, seconds string",
+        "run_id string, phase string, key string, rows long, seconds double",
     ).withColumn("updated_ts", F.current_timestamp())
     catalog.append(metrics, METRICS_TABLE)
 

@@ -17,11 +17,16 @@ An owned bucket has no done row until that final append, so a crash
 anywhere before it leaves the bucket owned and the next run clears
 and rewrites it — idempotence without read-side dedup.
 
-Scale: B should be sized so one bucket's turns fit a worker wave
-(e.g. B=4096 at 10^12 turns -> ~250M turns/bucket). Bucket id is a
-pure function of conv_id, so all turns of a conversation live in one
-bucket: per-conv semantics (dedup, ordering) never cross buckets, and
-distinct-conversation counts add up exactly across buckets.
+Scale: the job's one shuffle gives each owned bucket
+ceil(cores / |owned|) tasks (plans/job.py:transform), so with
+|owned| >= cores a bucket is exactly one task and one sort. Size B to
+at least the core count, and large enough that one bucket is a task's
+worth of input: at 10^12 turns (~100 TB) B=4096 puts ~25 GB in each
+task, B ~10^5 about 1 GB (a driver-side checkpoint of ~B x 20 rows).
+Bucket id is a pure function of conv_id, so all turns of a
+conversation live in one bucket: per-conv semantics (dedup, ordering)
+never cross buckets, and distinct-conversation counts add up exactly
+across buckets.
 """
 
 from __future__ import annotations

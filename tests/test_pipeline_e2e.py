@@ -128,7 +128,72 @@ def test_single_write_path_plan(spark, fixtures, tmp_path):
     plan = _resume_plan(spark, turns, fixtures, str(tmp_path / "wh"))
     text = plan.toString()
     assert _shuffles_and_broadcasts(plan) == (1, 1), text
-    assert "Exchange hashpartitioning(conv_id" in text, text
+    assert "Exchange shufflepartitionidpassthrough(" in text, text
+
+
+def _files_per_cell(wh) -> dict[str, int]:
+    import glob
+    import os
+
+    cells: dict[str, int] = {}
+    for f in glob.glob(os.path.join(wh, "sinks", "routed", "*", "bucket=*", "*.parquet")):
+        cell = os.path.relpath(os.path.dirname(f), wh)
+        cells[cell] = cells.get(cell, 0) + 1
+    return cells
+
+
+def test_one_shuffle_lays_out_the_write_by_bucket_and_salt(spark, fixtures, tmp_path):
+    """The dedup shuffle is keyed on (owned bucket, salt) with
+    ceil(cores / |owned|) salts per bucket, an explicit partition count
+    AQE cannot merge: a resume owning one of 8 buckets writes from
+    `cores` tasks, each cell from at most `cores` files, and a fresh run
+    owning all 8 writes at most ceil(cores / 8) files per cell."""
+    from logging_spark.sources import checkpoint as ckpt
+
+    turns, lookup, rules = fixtures
+    cores = spark.sparkContext.defaultParallelism
+    sizes = ckpt.with_bucket(turns, 8).groupBy("bucket").count().collect()
+    hot = max(sizes, key=lambda r: r["count"])["bucket"]
+    wh = str(tmp_path / "resume")
+    cat = RecordingCatalog(spark, wh)
+    ckpt.record_done(cat, pd.DataFrame([{
+        "bucket": b, "sink_name": "errors", "role": "assistant", "n_rows": 1,
+        "parse_errors": 0, "n_distinct_conv": 1} for b in range(8) if b != hot]), "lay-1")
+    res = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
+                       input_snapshot="lay-1")
+    assert res.buckets_processed == 1
+    assert cat.written.rdd.getNumPartitions() == cores
+    cells = _files_per_cell(wh)
+    assert cells and all(c.endswith(f"bucket={hot}") for c in cells), cells
+    assert max(cells.values()) <= cores, cells
+
+    wh = str(tmp_path / "fresh")
+    run_pipeline(spark, turns, lookup, rules, Catalog(spark, wh), num_buckets=8,
+                 input_snapshot="lay-2")
+    cells = _files_per_cell(wh)
+    assert len({c.rsplit("=", 1)[1] for c in cells}) == 8, cells
+    assert max(cells.values()) <= -(-cores // 8), cells
+
+
+def test_benchmark_imports_keep_their_signatures():
+    """The benchmark's worker plans the job's layers from these three;
+    their parameters and defaults stay as they are."""
+    import inspect
+
+    from logging_spark.operators.dedup import dedup_latest_wins
+    from logging_spark.sources import checkpoint as ckpt
+
+    def params(f):
+        return [(p.name, p.default) for p in inspect.signature(f).parameters.values()]
+
+    empty = inspect.Parameter.empty
+    assert params(ckpt.with_bucket) == [
+        ("df", empty), ("num_buckets", empty), ("key", "conv_id")]
+    assert params(ckpt.pending) == [
+        ("df_bucketed", empty), ("catalog", empty), ("input_snapshot", empty)]
+    assert params(dedup_latest_wins) == [
+        ("df", empty), ("keys", ("conv_id", "turn_idx")), ("order_ts", "ts"),
+        ("tiebreak", "text")]
 
 
 def test_generated_input_resume_plan_has_no_checkpoint_joins(spark, fixtures, tmp_path):
@@ -184,3 +249,9 @@ def test_observed_metrics_ride_the_write(spark, tmp_path):
     m = cat.read("meta.metrics").where(
         "phase = 'observe:rows_routed'").collect()
     assert m and int(m[0]["rows"]) == routed_rows
+    # phase seconds are typed, not formatted strings
+    metrics = cat.read("meta.metrics")
+    assert dict(metrics.dtypes)["seconds"] == "double"
+    (total,) = metrics.where("phase = 'pipeline'").collect()
+    assert abs(total["seconds"] - res.seconds) < 0.01
+    assert m[0]["seconds"] is None and total["rows"] is None
