@@ -60,12 +60,14 @@ from dataclasses import dataclass, field
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from logging_spark.functions.parse import parse_turns
 from logging_spark.operators.dedup import dedup_latest_wins
 from logging_spark.operators.enrich import enrich
 from logging_spark.operators.route import route
 from logging_spark.operators.rules import Rule, load_rules
+from logging_spark.schema import METRICS
 from logging_spark.sources import checkpoint as ckpt
 from logging_spark.sources.catalog import Catalog
 
@@ -159,7 +161,7 @@ def _bucket_stats(cells: DataFrame) -> pd.DataFrame:
     return roles.join(convs, ["bucket", "sink_name"]).select(*ckpt.STATS_COLS).toPandas()
 
 
-def _frame(spark: SparkSession, pdf: pd.DataFrame, schema: str) -> DataFrame:
+def _frame(spark: SparkSession, pdf: pd.DataFrame, schema: str | StructType) -> DataFrame:
     """A handful of driver rows as a one-partition frame (one file per
     write). pandas -> Arrow createDataFrame converts on the driver: a
     list-of-rows createDataFrame goes through pickled-RDD evaluation,
@@ -235,10 +237,12 @@ def run_pipeline(
         for phase, s in phase_secs.items()
     ] + [(run_id, f"observe:{k}", input_snapshot, v, None)
          for k, v in observed.items()]
+    # stamped as data, like the checkpoint's done rows
     metrics = _frame(
-        spark, pd.DataFrame(phase_rows, columns=["run_id", "phase", "key", "rows", "seconds"]),
-        "run_id string, phase string, key string, rows long, seconds double",
-    ).withColumn("updated_ts", F.current_timestamp())
+        spark, pd.DataFrame(phase_rows, columns=METRICS.fieldNames()[:-1])
+        .assign(updated_ts=pd.Timestamp.now(tz="UTC")),
+        METRICS,
+    )
     catalog.append(metrics, METRICS_TABLE)
 
     return PipelineResult(

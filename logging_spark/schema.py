@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -99,7 +100,7 @@ METRICS = StructType(
         StructField("phase", StringType(), False),
         StructField("key", StringType(), True),
         StructField("rows", LongType(), True),
-        StructField("seconds", StringType(), True),
+        StructField("seconds", DoubleType(), True),
         StructField("updated_ts", TimestampType(), True),
     ]
 )

@@ -107,6 +107,15 @@ def build_session(
                 "org.apache.hadoop.fs.RawLocalFileSystem")
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
                 "false")
+        # One pipeline run compiles ~72 generated classes (parse, the
+        # route's rules, writes, stats, aggregates). Spark's default
+        # 100-entry cache is 4 LRU segments of 25, and the key holds
+        # the class loader's identity hash, so in some JVMs a segment
+        # gets more live classes than it holds: those are evicted and
+        # recompiled in every later run (measured: 19 per run), and
+        # the JIT warms each new copy from scratch. A roomier cache
+        # keeps a run's classes resident in every JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # zstd sink files: ~3x smaller than snappy on log-like text, which
     # converts sink-write time from (serial) disk bandwidth into

@@ -34,7 +34,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from logging_spark.schema import CHECKPOINT
 from logging_spark.sources.catalog import Catalog
@@ -81,9 +80,10 @@ def record_done(catalog: Catalog, stats: pd.DataFrame, input_snapshot: str) -> N
     append."""
     if stats.empty:
         return
-    schema = StructType(CHECKPOINT.fields[:-1])  # all but updated_ts
-    rows = stats.assign(input_snapshot=input_snapshot, state="done")
-    df = catalog.spark.createDataFrame(rows[schema.fieldNames()], schema=schema) \
-        .withColumn("updated_ts", F.current_timestamp())
+    # the stamp is a data value: current_timestamp() folds into a
+    # literal of the generated code, a new class to compile every run
+    rows = stats.assign(input_snapshot=input_snapshot, state="done",
+                        updated_ts=pd.Timestamp.now(tz="UTC"))
+    df = catalog.spark.createDataFrame(rows[CHECKPOINT.fieldNames()], schema=CHECKPOINT)
     # <= B x sinks x roles rows: one file per append
     catalog.append(df.coalesce(1), CHECKPOINT_TABLE)

@@ -255,3 +255,8 @@ def test_observed_metrics_ride_the_write(spark, tmp_path):
     (total,) = metrics.where("phase = 'pipeline'").collect()
     assert abs(total["seconds"] - res.seconds) < 0.01
     assert m[0]["seconds"] is None and total["rows"] is None
+    # the run's stamp is data in both bookkeeping tables
+    for table in ("meta.metrics", "meta.checkpoint"):
+        stamped = cat.read(table)
+        assert dict(stamped.dtypes)["updated_ts"] == "timestamp"
+        assert stamped.where("updated_ts IS NULL").count() == 0
