@@ -78,7 +78,7 @@ def run_suite(cpus: int, repeats: int = 3, tier: str = "core") -> dict:
     from logging_spark.session import build_session
     from logging_spark import contract
 
-    spark = build_session("bench", cores=cpus, shuffle_partitions=max(2 * cpus, 8))
+    spark = build_session("bench", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     queries = contract.build_queries()
 

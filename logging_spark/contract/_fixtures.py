@@ -334,7 +334,7 @@ def enriched_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def routed_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full dedup -> parse -> enrich -> route chain (package ops),
+    """The full dedup -> enrich -> route chain (package ops),
     memoized: six contract queries derive from this frame."""
     return _memo(spark, sf_dir, "routed",
                  lambda: route(enriched_df(spark, sf_dir), RULES))

@@ -56,16 +56,6 @@ def distinct_token_count(text: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(text))).cast("long")
 
 
-def char_count(text: Column | str) -> Column:
-    text = F.col(text) if isinstance(text, str) else text
-    return F.length(text).cast("long")
-
-
-def stopword_count(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS_EN)])
-    return F.size(F.filter(tokens(text), lambda t: F.array_contains(sw, F.lower(t)))).cast("long")
-
-
 def quality_features(text: Column | str) -> Column:
     """Struct of cheap quality signals: counts + ratios used by corpus
     filters (Gopher/C4-style rules). Integer parts exact; ratios are

@@ -31,25 +31,6 @@ from logging_spark.functions.expr import let
 from logging_spark.operators.sample import hash60
 
 
-def cosine_udf_col(a: Column, b: Column) -> Column:
-    """Arrow-vectorized cosine: one einsum per batch. ~20x the
-    interpreted zip_with/aggregate expression on large candidate sets;
-    use for rows-only paths (float64 numpy sums differ from the
-    expression's pairwise fold in the last bits, so oracle-checked
-    queries keep cosine_expr)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(x: pd.Series, y: pd.Series) -> pd.Series:
-        A = np.vstack(x.to_numpy()).astype(np.float64)
-        B = np.vstack(y.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(num / den)
-
-    return _cos(a, b)
-
-
 def cosine_expr(a: Column, b: Column) -> Column:
     """Exact cosine in double precision via zip_with/aggregate —
     engine-portable semantics for oracle checks."""

@@ -93,16 +93,6 @@ def _empty_sentinel(portable: bool) -> Column:
     return F.lit("EMPTY") if portable else F.lit(2**63 - 1).cast("long")
 
 
-def minhash_signature(text: Column | str, num_perm: int = 8,
-                      w: int = 3, portable: bool = True) -> Column:
-    """Array of num_perm min-hashes over the shingle set (array<string>
-    portable / array<long> fast)."""
-    sh = shingles(text, w)
-    sig = F.array(*[_min_perm(sh, i, portable) for i in range(num_perm)])
-    sent = _empty_sentinel(portable)
-    return F.transform(sig, lambda h: F.coalesce(h, sent))
-
-
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", num_perm: int = 8,
                        w: int = 3, portable: bool = True) -> DataFrame:

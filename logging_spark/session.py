@@ -24,7 +24,6 @@ def build_session(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    master: str | None = None,
 ) -> SparkSession:
     """Build a session with the pipeline's standard configuration.
 
@@ -69,9 +68,7 @@ def build_session(
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         local_dir = "/dev/shm/spark-local"
     builder = SparkSession.builder.appName(app_name)
-    if master is not None:
-        builder = builder.master(master)
-    elif not submit_master:
+    if not submit_master:
         builder = builder.master(f"local[{cores}]")
     builder = (
         builder

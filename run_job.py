@@ -30,11 +30,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--input-parquet", default=None)
     p.add_argument("--input-orc", default=None, metavar="DIR",
                    help="read the turns table from an ORC directory "
-                        "(sources/orc.py) instead of parquet/synth")
-    p.add_argument("--input-pysource", action="store_true",
-                   help="read turns via the custom Python DataSource "
-                        "(sources/pysource.py) instead of synth — "
-                        "exercises the connector surface end-to-end")
+                        "instead of parquet/synth")
     p.add_argument("--input-logs", default=None, metavar="DIR",
                    help="read raw log FILES (one line per record, "
                         ".../service/pod.log) via the text source and run "
@@ -99,26 +95,13 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"gen_input": base, "n_input_turns": n}))
         return 0
 
-    if args.input_pysource:
-        from logging_spark.sources.pysource import TranscriptDataSource
-        spark.dataSource.register(TranscriptDataSource)
-        # the reader implements pushFilters(); Spark refuses to run it
-        # with the pushdown conf off
-        spark.conf.set("spark.sql.python.filterPushdown.enabled",
-                       "true")
-        turns = (spark.read.format("synthetic_transcripts")
-                 .option("n_conversations", args.n_conversations)
-                 .option("turns_per_conv", args.turns_per_conv)
-                 .option("buckets", args.num_buckets)
-                 .load())
-    elif args.input_logs:
+    if args.input_logs:
         from logging_spark.sources.textlog import logfile_input
         turns = logfile_input(spark, args.input_logs)
     elif args.input_parquet:
         turns = spark.read.parquet(args.input_parquet)
     elif args.input_orc:
-        from logging_spark.sources.orc import read_orc
-        turns = read_orc(spark, args.input_orc)
+        turns = spark.read.orc(args.input_orc)
     else:
         turns = synth.transcripts(
             spark,

@@ -1,4 +1,5 @@
-"""ORC source/sink round-trip + scan-hygiene proofs (sources/orc.py)."""
+"""ORC round-trip and scan-hygiene proofs for Spark's own ORC reader
+and writer (`run_job.py --input-orc` reads turns through them)."""
 
 import os
 
@@ -7,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from logging_spark.operators.dq import table_fingerprint
-from logging_spark.sources.orc import read_orc, write_orc
 
 
 def _fp(df):
@@ -20,8 +20,8 @@ def _fp(df):
 def test_orc_roundtrip_fingerprint_identical(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     path = str(tmp_path / "docs_orc")
-    write_orc(docs, path)
-    back = read_orc(spark, path)
+    docs.write.orc(path)
+    back = spark.read.orc(path)
     assert back.schema == docs.schema
     assert _fp(back) == _fp(docs)
 
@@ -29,8 +29,8 @@ def test_orc_roundtrip_fingerprint_identical(spark, sf_dir, tmp_path):
 def test_orc_events_timestamp_ntz_roundtrip(spark, sf_dir, tmp_path):
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     path = str(tmp_path / "events_orc")
-    write_orc(ev, path)
-    back = read_orc(spark, path)
+    ev.write.orc(path)
+    back = spark.read.orc(path)
     assert dict(back.dtypes)["ts"] == dict(ev.dtypes)["ts"]
     a = ev.agg(F.expr("bit_xor(unix_micros(CAST(ts AS timestamp)))")
                .alias("x"), F.count(F.lit(1)).alias("n")).collect()[0]
@@ -42,8 +42,8 @@ def test_orc_events_timestamp_ntz_roundtrip(spark, sf_dir, tmp_path):
 def test_orc_scan_pushes_filters_and_prunes_columns(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     path = str(tmp_path / "docs_orc_scan")
-    write_orc(docs, path)
-    q = (read_orc(spark, path)
+    docs.write.orc(path)
+    q = (spark.read.orc(path)
          .where(F.col("lang") == "en")
          .select("doc_id", "n_chars"))
     plan = q._sc._jvm.PythonSQLUtils.explainString(
@@ -58,9 +58,9 @@ def test_orc_scan_pushes_filters_and_prunes_columns(spark, sf_dir, tmp_path):
 def test_orc_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     path = str(tmp_path / "docs_orc_part")
-    write_orc(docs, path, partition_by=["lang"])
+    docs.write.partitionBy("lang").orc(path)
     assert os.path.isdir(os.path.join(path, "lang=en"))
-    q = read_orc(spark, path).where(F.col("lang") == "en")
+    q = spark.read.orc(path).where(F.col("lang") == "en")
     plan = q._sc._jvm.PythonSQLUtils.explainString(
         q._jdf.queryExecution(), "formatted")
     part_line = plan.split("PartitionFilters")[1].splitlines()[0]

@@ -7,11 +7,19 @@ ones included, and the contract's `import_module` families
 (`import_module(f'logging_spark.contract.{m}') for m in (...)`).
 Importing `a.b.c` also runs `a/__init__.py` and `a/b/__init__.py`.
 Tests are not roots: a module that only its own tests import is dead
-code."""
+code.
+
+Every top-level function and class of the package is also named
+somewhere outside its own definition, in any `.py` file of the repo:
+code, a comment or docstring, an entry point or a test. Here tests
+count, so a function kept only as a test's reference passes; one that
+no file names fails."""
 
 from __future__ import annotations
 
 import ast
+import re
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -73,3 +81,23 @@ def _reached() -> set[str]:
 def test_every_package_module_is_reached():
     unreached = sorted(set(_modules()) - _reached())
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def _words(text: str) -> Counter:
+    return Counter(re.findall(r"\w+", text))
+
+
+def test_every_package_function_is_named_outside_its_definition():
+    files = [p for p in ROOT.rglob("*.py")
+             if not any(part.startswith(".") for part in p.relative_to(ROOT).parts)]
+    words = sum((_words(p.read_text()) for p in files), Counter())
+    unnamed = []
+    for name, path in sorted(_modules().items()):
+        lines = path.read_text().splitlines()
+        for node in ast.parse("\n".join(lines), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                own = _words("\n".join(lines[node.lineno - 1:node.end_lineno]))
+                if words[node.name] - own[node.name] <= 0:
+                    unnamed.append(f"{name}.{node.name}")
+    assert not unnamed, f"package functions no file names: {unnamed}"

@@ -101,40 +101,27 @@ def test_dedup_lines_cap_makes_quadratic_total(spark):
     assert out2[0]["d"] == "a\nb\nc"
 
 
-def test_enrich_auto_counts_dim_once_per_plan(spark):
-    from pyspark.sql import DataFrame
+def test_enrich_plans_without_a_job_and_broadcasts_a_small_dim(spark):
+    """Building the enrich plan starts no Spark job: the session's
+    broadcast threshold, not a count of the dim, picks the join."""
+    import uuid
 
-    import importlib
+    from logging_spark import obs, synth
+    from logging_spark.operators.enrich import enrich
 
-    # the MODULE, not the function the package __init__ re-exports
-    # under the same name (plain `import ... as` resolves to the latter)
-    E = importlib.import_module("logging_spark.operators.enrich")
-
+    name = f"enrich-plan-{uuid.uuid4().hex}"
     turns = spark.createDataFrame(
         [("c1", 1, "user", "hi", "tool_01")],
         "conv_id string, turn_idx int, role string, text string, tool string")
-    lookup = spark.createDataFrame(
-        [("c1", "tool_01", "ns", "pod", "node", "svc")],
-        "conv_id string, tool string, namespace string, pod_name string, "
-        "node_name string, service_name string")
-    # patch the CONCRETE class (Spark 4: pyspark.sql.classic overrides
-    # the pyspark.sql.DataFrame base methods)
-    cls = type(lookup)
-    E._DIM_SIZE_CACHE.clear()
-    calls = {"n": 0}
-    orig = cls.count
-
-    def counting(self):
-        calls["n"] += 1
-        return orig(self)
-
-    cls.count = counting
-    try:
-        E.enrich(turns, lookup).collect()
-        E.enrich(turns, lookup).collect()  # same dim plan -> cache hit
-    finally:
-        cls.count = orig
-    assert calls["n"] == 1
+    # the generated dim has size statistics (a local list's scan has
+    # none); the group name in a dim value makes a plan no earlier call
+    # has seen
+    lookup = synth.lookup(spark, n_conversations=10).withColumn(
+        "namespace", F.lit(name))
+    with obs.group(spark, name):
+        plan = enrich(turns, lookup)._jdf.queryExecution().executedPlan().toString()
+    assert obs._job_ids(spark, name) == []
+    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_ngram_repetition_counts(spark):
