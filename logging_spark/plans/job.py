@@ -45,10 +45,13 @@ no stale cell, and a crash before the final append leaves the bucket
 owned for the next run.
 
 Aggregates: per-bucket stats are recomputed from the committed cells
-(SURVEY §7 hard-parts), never incremented; agg.* are sums over the
-snapshot's done rows. A conversation lives in exactly one bucket, so
-distinct-conversation counts add up across buckets exactly, and the
-aggregate step reads only the cells this run wrote.
+(SURVEY §7 hard-parts), never incremented, and stored once, as the
+buckets' done rows. The per-sink aggregates are `rollup` of the
+snapshot's done rows, with no table of their own: a reader rebuilds
+them as rollup(ckpt.done_rows(catalog, snapshot)). A conversation
+lives in exactly one bucket, so distinct-conversation counts add up
+across buckets exactly, and the aggregate step reads only the cells
+this run wrote.
 """
 
 from __future__ import annotations
@@ -72,8 +75,6 @@ from logging_spark.sources import checkpoint as ckpt
 from logging_spark.sources.catalog import Catalog
 
 ROUTED_TABLE = "sinks.routed"
-AGG_COUNTS_TABLE = "agg.per_sink_counts"
-AGG_ROLES_TABLE = "agg.per_sink_role_rollup"
 METRICS_TABLE = "meta.metrics"
 AGG_COUNTS_SCHEMA = "sink_name string, n_rows long, n_distinct_conv long"
 AGG_ROLES_SCHEMA = "sink_name string, role string, n_turns long"
@@ -90,7 +91,13 @@ class PipelineResult:
     """One run's outcome. `buckets_processed` counts the buckets the run
     owned (range(num_buckets) minus the snapshot's done rows), empty
     ones included: a bucket with no input rows gets no done row, so it
-    stays owned and is counted again on the next run."""
+    stays owned and is counted again on the next run.
+
+    `per_sink_counts` and `role_rollup` are `rollup` of the snapshot's
+    done rows, prior and new, as driver-built frames: the warehouse
+    keeps no copy of them. A reader rebuilds them from the warehouse
+    as rollup(ckpt.done_rows(catalog, snapshot)); `meta.metrics`
+    records each run's snapshot."""
     run_id: str
     buckets_processed: int
     buckets_skipped: int
@@ -161,6 +168,21 @@ def _bucket_stats(cells: DataFrame) -> pd.DataFrame:
     return roles.join(convs, ["bucket", "sink_name"]).select(*ckpt.STATS_COLS).toPandas()
 
 
+def rollup(rows: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Done rows (ckpt.STATS_COLS) -> the per-sink aggregates: counts
+    (AGG_COUNTS_SCHEMA) and the role rollup (AGG_ROLES_SCHEMA). Sums
+    only: the distinct-conversation count sits on each role row of a
+    (bucket, sink), so it is taken once per (bucket, sink)."""
+    rows = rows.astype(
+        {"n_rows": "int64", "parse_errors": "int64", "n_distinct_conv": "int64"})
+    convs = rows.drop_duplicates(["bucket", "sink_name"])
+    counts = (rows.groupby("sink_name", as_index=False)["n_rows"].sum()
+              .merge(convs.groupby("sink_name", as_index=False)["n_distinct_conv"].sum()))
+    roles = (rows.groupby(["sink_name", "role"], as_index=False, dropna=False)["n_rows"]
+             .sum().rename(columns={"n_rows": "n_turns"}))
+    return counts, roles
+
+
 def _frame(spark: SparkSession, pdf: pd.DataFrame, schema: str | StructType) -> DataFrame:
     """A handful of driver rows as a one-partition frame (one file per
     write). pandas -> Arrow createDataFrame converts on the driver: a
@@ -212,23 +234,14 @@ def run_pipeline(
 
     # stats recomputed FROM THE COMMITTED CELLS of the owned buckets
     # (partition-pruned), appended as their done rows; the aggregates
-    # are sums over the snapshot's done rows, prior and new.
+    # are the rollup of the snapshot's done rows, prior and new.
     ta = time.time()
     # no routed rows means no committed owned cell (and perhaps no
     # table to read yet)
     new = (_bucket_stats(catalog.read(ROUTED_TABLE).where(F.col("bucket").isin(owned)))
            if observed.get("rows_routed") else done.iloc[:0])
     ckpt.record_done(catalog, new, input_snapshot)
-    rows = pd.concat([done, new]).astype(
-        {"n_rows": "int64", "parse_errors": "int64", "n_distinct_conv": "int64"})
-    convs = rows.drop_duplicates(["bucket", "sink_name"])
-    counts = (rows.groupby("sink_name", as_index=False)["n_rows"].sum()
-              .merge(convs.groupby("sink_name", as_index=False)["n_distinct_conv"].sum()))
-    roles = (rows.groupby(["sink_name", "role"], as_index=False, dropna=False)["n_rows"]
-             .sum().rename(columns={"n_rows": "n_turns"}))
-    # swapped in whole: a crash mid-write leaves the previous tables
-    catalog.replace(_frame(spark, counts, AGG_COUNTS_SCHEMA), AGG_COUNTS_TABLE)
-    catalog.replace(_frame(spark, roles, AGG_ROLES_SCHEMA), AGG_ROLES_TABLE)
+    counts, roles = rollup(pd.concat([done, new]))
     phase_secs["aggregate_checkpoint"] = time.time() - ta
 
     secs = time.time() - t0
@@ -252,8 +265,8 @@ def run_pipeline(
         seconds=secs,
         phase_seconds=phase_secs,
         observed=observed,
-        per_sink_counts=catalog.read(AGG_COUNTS_TABLE),
-        role_rollup=catalog.read(AGG_ROLES_TABLE),
+        per_sink_counts=spark.createDataFrame(counts, AGG_COUNTS_SCHEMA),
+        role_rollup=spark.createDataFrame(roles, AGG_ROLES_SCHEMA),
     )
 
 

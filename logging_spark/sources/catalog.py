@@ -4,20 +4,19 @@ Parquet-directory fallback otherwise.
 STATUS OF THE ICEBERG BRANCH: designed-for, NOT exercised — this image
 ships no iceberg-spark-runtime jar and has no network to fetch one, so
 every `self.iceberg` path below (snapshot reads, DELETE FROM,
-createOrReplace) is written against the published Iceberg-Spark API but has
+writeTo appends) is written against the published Iceberg-Spark API but has
 never run here. The tested, supported backend in this repo is the
 parquet fallback; treat the Iceberg code as a deployment template to
 be validated when a jar is available (drop it on the classpath and the
 same Catalog calls switch over).
 
-The pipeline only uses six verbs, all of which exist in both
+The pipeline only uses five verbs, all of which exist in both
 backends with the same semantics:
 
 - read(table)
 - append(df, table)
 - clear_partitions(table, column, values)  # empty a run's owned buckets
 - overwrite_partitions(df, table, partition_cols)  # append them back
-- replace(df, table)  # whole-table publish, old copy live until swap
 - table_exists(table)  # the topic-exists probe analog
   (reference pkg/utils/kafka.go:9-28)
 
@@ -27,7 +26,9 @@ clear_partitions empties every cell of the buckets the run owns
 overwrite_partitions appends the new rows into them (Iceberg
 ``writeTo(t).append()``, Parquet ``mode('append').partitionBy``).
 A cell whose new output is empty therefore keeps no old rows, and no
-session conf changes how other writers overwrite. Sink tables are
+session conf changes how other writers overwrite. Nothing else
+rewrites a table: the warehouse is written only by append and
+clear_partitions. Sink tables are
 created on first write — the analog of auto topic creation
 (kafka.go:30-56).
 
@@ -105,33 +106,6 @@ class Catalog:
     def _ident(self, table: str) -> str:
         return f"{self.catalog_name}.{table}"
 
-    def _swap(self, table: str, write) -> None:
-        """Parquet-fallback publish: `write(tmp)` fills a temp sibling
-        directory, then two renames swap it over the table path. The
-        previous copy stays on disk, readable, until the new one is
-        fully written, so a crash or lost executor mid-write never
-        loses the table (mode('overwrite') in place deletes the old
-        files BEFORE the write). Residual non-atomicity: between the
-        two renames the table path is briefly absent. The previous
-        copy must really be gone afterwards — a swallowed rmtree
-        failure would keep stale rows on disk and block the next
-        swap's rename — so that is verified, not assumed."""
-        path = self._path(table)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        old = f"{path}.old"
-        write(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        if not os.path.exists(path):
-            os.rename(tmp, path)
-            return
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(old):
-            raise OSError(
-                f"{table}: previous copy still present at {old} — "
-                "remove it manually")
-
     # -- verbs ---------------------------------------------------------
     def table_exists(self, table: str) -> bool:
         if self.iceberg:
@@ -190,17 +164,6 @@ class Catalog:
                 dirnames.remove(d)  # never descend below the column's level
                 if d in wanted:
                     shutil.rmtree(os.path.join(dirpath, d))
-
-    def replace(self, df: DataFrame, table: str) -> None:
-        """Replace the whole table with df, creating it if absent.
-        Readers see the previous rows until df is fully written: a
-        write that fails part-way leaves the old table in place. On
-        Iceberg this is ``writeTo(t).createOrReplace()`` (one atomic
-        snapshot swap); the parquet fallback is _swap."""
-        if self.iceberg:
-            df.writeTo(self._ident(table)).createOrReplace()
-            return
-        self._swap(table, df.write.mode("overwrite").parquet)
 
     def drop(self, table: str) -> None:
         if self.iceberg:

@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 
 from logging_spark import synth
 from logging_spark.operators.rules import load_rules
-from logging_spark.plans.job import ROUTED_TABLE, run_pipeline
+from logging_spark.plans.job import ROUTED_TABLE, rollup, run_pipeline
+from logging_spark.sources import checkpoint as ckpt
 from logging_spark.sources.catalog import Catalog
 
 from tests import oracle
@@ -38,25 +39,44 @@ def _oracle_routed(turns_df, rules_df):
     return oracle.route(oracle.dedup(pdf), rules)
 
 
+def _warehouse_rollup(cat):
+    """The aggregates a warehouse reader rebuilds from the done rows of
+    the run's snapshot (run_pipeline's default)."""
+    return rollup(ckpt.done_rows(cat, "snap-0"))
+
+
 def test_per_sink_counts_exact(run):
     cat, res, turns, rules = run
-    got = res.per_sink_counts.orderBy("sink_name").toPandas()
     want = oracle.per_sink_counts(_oracle_routed(turns, rules))
-    pd.testing.assert_frame_equal(
-        got.reset_index(drop=True)[["sink_name", "n_rows", "n_distinct_conv"]],
-        want[["sink_name", "n_rows", "n_distinct_conv"]],
-        check_dtype=False,
-    )
+    for got in (res.per_sink_counts.toPandas(), _warehouse_rollup(cat)[0]):
+        pd.testing.assert_frame_equal(
+            got.sort_values("sink_name").reset_index(drop=True)[
+                ["sink_name", "n_rows", "n_distinct_conv"]],
+            want[["sink_name", "n_rows", "n_distinct_conv"]],
+            check_dtype=False,
+        )
 
 
 def test_role_rollup_exact(run):
     cat, res, turns, rules = run
-    got = (res.role_rollup.orderBy("sink_name", "role").toPandas()
-           .reset_index(drop=True))
     want = oracle.role_rollup(_oracle_routed(turns, rules))
-    pd.testing.assert_frame_equal(
-        got[["sink_name", "role", "n_turns"]], want, check_dtype=False
-    )
+    for got in (res.role_rollup.toPandas(), _warehouse_rollup(cat)[1]):
+        pd.testing.assert_frame_equal(
+            got.sort_values(["sink_name", "role"]).reset_index(drop=True)[
+                ["sink_name", "role", "n_turns"]],
+            want, check_dtype=False,
+        )
+
+
+def test_warehouse_holds_the_sink_and_bookkeeping_only(run):
+    """Each fact is stored once: the sink cells, the done rows and the
+    run metrics. The per-sink aggregates have no table."""
+    import os
+
+    cat, _, _, _ = run
+    tables = sorted(f"{ns}/{t}" for ns in os.listdir(cat.warehouse)
+                    for t in os.listdir(os.path.join(cat.warehouse, ns)))
+    assert tables == ["meta/checkpoint", "meta/metrics", "sinks/routed"], tables
 
 
 def test_routed_text_equality_under_ordering(run):

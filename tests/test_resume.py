@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logging_spark import synth
-from logging_spark.plans.job import ROUTED_TABLE, read_sink, run_pipeline
+from logging_spark.plans.job import ROUTED_TABLE, read_sink, rollup, run_pipeline
 from logging_spark.sources import checkpoint as ckpt
 from logging_spark.sources.catalog import Catalog, merge_frames
 from logging_spark.sources.checkpoint import CHECKPOINT_TABLE
@@ -22,8 +22,11 @@ def fixtures(spark):
     return turns, lookup, rules
 
 
-def _snapshot(cat):
-    counts = {tuple(r) for r in cat.read("agg.per_sink_counts").collect()}
+def _snapshot(cat, snap):
+    """The warehouse's outputs under snapshot `snap`: the per-sink
+    counts rolled up from its done rows, and a digest of the sink."""
+    counts, _ = rollup(ckpt.done_rows(cat, snap))
+    counts = set(counts.itertuples(index=False, name=None))
     routed = cat.read(ROUTED_TABLE).agg(
         F.count(F.lit(1)),
         F.expr("bit_xor(xxhash64(sink_name, conv_id, turn_idx, text))"),
@@ -36,7 +39,7 @@ def test_rerun_after_partial_checkpoint_loss(spark, fixtures, tmp_path_factory):
     cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
     r1 = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
                       input_snapshot="snap-A")
-    want = _snapshot(cat)
+    want = _snapshot(cat, "snap-A")
     assert r1.buckets_skipped == 0
 
     # lose half the checkpoint rows (simulated partial failure):
@@ -49,7 +52,7 @@ def test_rerun_after_partial_checkpoint_loss(spark, fixtures, tmp_path_factory):
     r2 = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
                       input_snapshot="snap-A")
     assert r2.buckets_skipped > 0  # surviving buckets were not redone
-    assert _snapshot(cat) == want  # outputs identical, no double-writes
+    assert _snapshot(cat, "snap-A") == want  # outputs identical, no double-writes
 
 
 def test_fully_checkpointed_run_is_noop_on_sinks(spark, fixtures, tmp_path_factory):
@@ -57,11 +60,11 @@ def test_fully_checkpointed_run_is_noop_on_sinks(spark, fixtures, tmp_path_facto
     cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
     run_pipeline(spark, turns, lookup, rules, cat, num_buckets=4,
                  input_snapshot="snap-B")
-    want = _snapshot(cat)
+    want = _snapshot(cat, "snap-B")
     r2 = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=4,
                       input_snapshot="snap-B")
     assert r2.buckets_skipped == 4
-    assert _snapshot(cat) == want
+    assert _snapshot(cat, "snap-B") == want
 
 
 def test_new_snapshot_reprocesses(spark, fixtures, tmp_path_factory):
@@ -85,7 +88,7 @@ def test_crashed_bucket_partial_write_is_overwritten(spark, fixtures, tmp_path_f
     cat = Catalog(spark, wh)
     run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
                  input_snapshot="snap-E")
-    want = _snapshot(cat)
+    want = _snapshot(cat, "snap-E")
 
     # un-checkpoint bucket 2, then plant garbage rows in one of its
     # sink partitions (simulating a crash after a partial write)
@@ -108,14 +111,14 @@ def test_crashed_bucket_partial_write_is_overwritten(spark, fixtures, tmp_path_f
     assert r2.buckets_skipped == 7
     assert cat.read(ROUTED_TABLE).where(
         F.col("conv_id") == "conv-GARBAGE").count() == 0  # partition rewritten
-    assert _snapshot(cat) == want
+    assert _snapshot(cat, "snap-E") == want
 
 
 def _fresh(spark, turns, lookup, rules, tmp_path_factory):
     cat = Catalog(spark, str(tmp_path_factory.mktemp("fresh")))
     run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
                  input_snapshot="fresh")
-    return _snapshot(cat)
+    return _snapshot(cat, "fresh")
 
 
 def test_shrunk_input_new_snapshot_equals_fresh_run(spark, fixtures, tmp_path_factory):
@@ -129,7 +132,7 @@ def test_shrunk_input_new_snapshot_equals_fresh_run(spark, fixtures, tmp_path_fa
                  input_snapshot="snap-F")
     run_pipeline(spark, shrunk, lookup, rules, cat, num_buckets=8,
                  input_snapshot="snap-G")
-    assert _snapshot(cat) == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
+    assert _snapshot(cat, "snap-G") == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
 
 
 def test_empty_bucket_stays_owned_until_it_has_rows(spark, fixtures, tmp_path_factory):
@@ -148,7 +151,7 @@ def test_empty_bucket_stays_owned_until_it_has_rows(spark, fixtures, tmp_path_fa
     r2 = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
                       input_snapshot="snap-S")
     assert (r2.buckets_processed, r2.buckets_skipped) == (1, 7)
-    assert _snapshot(cat) == _fresh(spark, turns, lookup, rules, tmp_path_factory)
+    assert _snapshot(cat, "snap-S") == _fresh(spark, turns, lookup, rules, tmp_path_factory)
 
 
 def test_disabled_rule_new_snapshot_empties_its_sink(spark, fixtures, tmp_path_factory):
@@ -162,7 +165,7 @@ def test_disabled_rule_new_snapshot_empties_its_sink(spark, fixtures, tmp_path_f
                        input_snapshot="snap-I")
     assert read_sink(cat, "errors").count() == 0
     assert "errors" not in {r["sink_name"] for r in res.per_sink_counts.collect()}
-    assert _snapshot(cat) == _fresh(spark, turns, lookup, off, tmp_path_factory)
+    assert _snapshot(cat, "snap-I") == _fresh(spark, turns, lookup, off, tmp_path_factory)
 
 
 def test_crash_between_clear_and_write_ends_exact(spark, fixtures, tmp_path_factory):
@@ -190,7 +193,7 @@ def test_crash_between_clear_and_write_ends_exact(spark, fixtures, tmp_path_fact
     res = run_pipeline(spark, shrunk, lookup, rules, cat, num_buckets=8,
                        input_snapshot="snap-K")
     assert res.buckets_skipped == 0
-    assert _snapshot(cat) == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
+    assert _snapshot(cat, "snap-K") == _fresh(spark, shrunk, lookup, rules, tmp_path_factory)
 
 
 def test_crash_inside_the_write_ends_exact(spark, fixtures, tmp_path_factory):
@@ -218,12 +221,12 @@ def test_crash_inside_the_write_ends_exact(spark, fixtures, tmp_path_factory):
     res = run_pipeline(spark, turns, lookup, rules, cat, num_buckets=8,
                        input_snapshot="snap-N")
     assert res.buckets_skipped == 0
-    assert _snapshot(cat) == _fresh(spark, turns, lookup, rules, tmp_path_factory)
+    assert _snapshot(cat, "snap-N") == _fresh(spark, turns, lookup, rules, tmp_path_factory)
 
 
 def test_empty_input_empty_warehouse(spark, fixtures, tmp_path_factory):
-    """Empty input finishes: no bucket is done and the aggregate tables
-    exist, empty, with their usual schema."""
+    """Empty input finishes: no bucket is done, and the result's
+    aggregate frames are empty with their usual schema."""
     turns, lookup, rules = fixtures
     cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
     res = run_pipeline(spark, turns.limit(0), lookup, rules, cat, num_buckets=4,
@@ -272,26 +275,3 @@ def test_merge_upsert_latest_wins_order_col(spark):
     upd = spark.createDataFrame([("k1", "mid", 5), ("k1", "new", 9)], schema)
     rows = merge_frames(first, upd, ["k"], order_col="ts").collect()
     assert len(rows) == 1 and rows[0]["v"] == "new" and rows[0]["ts"] == 9
-
-
-def test_replace_failed_write_keeps_previous_table(spark, tmp_path):
-    """Catalog.replace publishes the aggregate tables: a DataFrame that
-    fails part-way through its write must leave the previous table
-    readable with its old rows, and a good replace leaves no debris."""
-    import os
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    schema = "k string, n long"
-    cat.replace(spark.createDataFrame([("a", 1), ("b", 2)], schema), "agg.t")
-    bad = spark.range(0, 1000, 1, 8).select(
-        F.when(F.col("id") < 500, F.lit("x"))
-        .otherwise(F.raise_error(F.lit("boom"))).alias("k"),
-        F.col("id").alias("n"))
-    with pytest.raises(Exception, match="boom"):
-        cat.replace(bad, "agg.t")
-    rows = sorted(tuple(r) for r in cat.read("agg.t").collect())
-    assert rows == [("a", 1), ("b", 2)]
-
-    cat.replace(spark.createDataFrame([("c", 3)], schema), "agg.t")
-    assert [tuple(r) for r in cat.read("agg.t").collect()] == [("c", 3)]
-    assert not os.path.exists(cat._path("agg.t") + ".old")
